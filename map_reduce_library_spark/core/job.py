@@ -190,9 +190,11 @@ class JobHandle:
         - Once the handle carries PairCounters, the per-task
           StatusTracker is NEVER consulted for a stage the pair
           denominators cover — before the first accumulator update
-          lands, a sized job reports ``MAP/0%`` (the reference
-          initializes its atomic to MAP/total/0 before any thread
-          starts, MapReduceFramework.cpp:216), not the task fraction,
+          lands (sort mode's range sketch maps without counters, so
+          this includes its whole sketch job), a sized job reports
+          ``MAP/0%`` (the reference initializes its atomic to
+          MAP/total/0 before any thread starts,
+          MapReduceFramework.cpp:216), not the task fraction,
           so the task→pair handoff cannot step backwards. The tracker
           remains the fallback only for plain actions and for a MAP
           stage whose input count is unknown (no pair denominator
@@ -414,23 +416,18 @@ def run_map_reduce_async(
                     pass
             return sink
         finally:
-            # release the sort path's persisted intermediate (set by
-            # run_map_reduce when counters force a cache to keep the
-            # range-partitioner sample pass from double-counting) —
-            # a loop of async sort-mode jobs must not accumulate
-            # pinned executor storage (code-review r12)
-            for cached in (
-                counters.cached_intermediate, counters.cached_sorted
-            ):
-                if cached is not None:
-                    try:
-                        cached.unpersist(blocking=False)
-                    except Exception:  # noqa: BLE001 — cleanup must
-                        # never mask the action's real outcome (a
-                        # stopped SparkContext racing cancel(), a py4j
-                        # failure): the blocks die with the context
-                        # anyway
-                        pass
+            # release the grouped intermediate that exact_reduce_keys
+            # persisted for its key count: a loop of async jobs must
+            # not accumulate pinned executor storage
+            cached = counters.cached_intermediate
+            if cached is not None:
+                try:
+                    cached.unpersist(blocking=False)
+                except Exception:  # noqa: BLE001 — cleanup must never
+                    # mask the action's real outcome (a stopped
+                    # SparkContext racing cancel(), a py4j failure):
+                    # the blocks die with the context anyway
+                    pass
 
     handle = JobHandle(spark, action, counters=counters)
     handle.counters = counters

@@ -25,24 +25,37 @@ Two execution paths:
   the per-partition imperative case the DataFrame API can't express
   for opaque user objects.
 - ``map_reduce_df``: the Spark-first path — Arrow-vectorized
-  ``mapInPandas`` flat-map + ``groupBy().applyInPandas`` holistic
-  reduce over typed columns. Use this one for anything with a schema;
-  it keeps data JVM/Arrow-side and scales to 1000 executors.
+  ``mapInPandas`` flat-map + a sorted-stream holistic reduce over typed
+  columns. Use this one for anything with a schema; it keeps data
+  JVM/Arrow-side and scales to 1000 executors.
 
 Scale note: ``key_mode='hash'`` is one hash shuffle (same plan shape as
 any groupBy) and is the default. ``key_mode='sort'`` adds a range
-partitioner + in-partition sort (sortByKey), which is the faithful
-"ordering-only keys" path AND gives globally sorted key iteration; use
-it only when keys aren't hashable or sorted iteration matters — a range
-shuffle samples the input and balances skew by construction.
+partitioner + in-partition sort, which is the faithful "ordering-only
+keys" path AND gives globally sorted key iteration; use it only when
+keys aren't hashable or sorted iteration matters. Its bounds come from
+one sketch job over the map (a count and a key sample per partition),
+weighted as Spark's RangePartitioner weights them, so skewed inputs
+still balance.
+
+Every stage of a generic job starts one Python worker per task: no
+stage reads a persisted PythonRDD back through a second worker, and no
+job runs that the contract does not need (sort mode's sketch; the
+distinct-key count under ``exact_reduce_keys``).
 """
 
 from __future__ import annotations
 
+import math
+import random
+from bisect import bisect_left
 from collections.abc import Callable, Iterable, Iterator
+from operator import itemgetter
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.rdd import RDD
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame, SparkSession
 
 MapFn = Callable[[Any, Any], Iterable[tuple[Any, Any]]]
@@ -103,9 +116,10 @@ class PairCounters:
     reachable — pinned deterministically by
     test_counter_overshoot_from_duplicate_delivery_stays_clamped.
     Either way: acceptable for PROGRESS, never for answers (results
-    never flow through accumulators). Sort mode persists its instrumented intermediate,
-    which also removes the range-partitioner sample pass's
-    double-count (the one recomputation that occurs by design).
+    never flow through accumulators). Sort mode's range sketch runs
+    the user's map WITHOUT counters, so only the shuffle pass counts
+    and every pair is counted once; while the sketch job runs, every
+    counter reads zero and a sized job reports MAP/0%.
     """
 
     def __init__(self, spark: SparkSession, input_total: int | None = None):
@@ -116,13 +130,10 @@ class PairCounters:
         self.shuffled = sc.accumulator(0)  # pairs arrived at reducers
         self.reduced = sc.accumulator(0)  # pairs consumed by reduce
         self.keys = sc.accumulator(0)  # distinct keys reduced
-        # set by run_map_reduce's sort path: the persisted intermediate
-        # RDD, for the caller to unpersist once the output is consumed
+        # set by run_map_reduce(exact_reduce_keys=True), either key
+        # mode: the persisted grouped intermediate, for the caller to
+        # unpersist once the output is consumed
         self.cached_intermediate = None
-        # set by run_map_reduce's sort path under exact_reduce_keys:
-        # the persisted SORTED intermediate (reused by both the
-        # run-count job and the reduce), same unpersist contract
-        self.cached_sorted = None
         # set by run_map_reduce(exact_reduce_keys=True): total distinct
         # intermediate keys — the reference's exact REDUCE denominator
         # (MapReduceFramework.cpp:190-195). None → JobState falls back
@@ -130,47 +141,59 @@ class PairCounters:
         self.key_total: int | None = None
 
 
-def _make_sorted_run_reducer(
-    reduce_fn: ReduceFn, counters: PairCounters | None = None
-):
-    """Build the per-partition reducer for sort mode. Defined nested so
-    cloudpickle ships it BY VALUE — executors never need this package
-    on their PYTHONPATH (the driver may be the only place it's
-    installed). Captures the ACCUMULATORS, never the PairCounters
-    object itself: counters carries the driver-side
-    ``cached_intermediate`` RDD handle, and an RDD inside a shipped
-    closure is SPARK-5063."""
-    accs = (
-        None
-        if counters is None
-        else (counters.shuffled, counters.reduced, counters.keys)
+# Spark's RangePartitioner sizing: about 20 sampled keys per output
+# partition, sampled 3x over across the input partitions, at most 1e6.
+_SAMPLE_POINTS_PER_PARTITION = 20
+_MAX_SAMPLE_SIZE = 1_000_000
+
+
+def _range_bounds(keyed: RDD, num_partitions: int) -> list:
+    """Upper bounds for ``num_partitions`` key ranges, from ONE sketch
+    job over ``keyed``: each partition reports its pair count and a
+    reservoir sample of its keys; each sampled key weighs count /
+    sample size, and the bounds cut the weight into equal steps, as in
+    Spark's RangePartitioner (which additionally re-samples partitions
+    that outgrew their reservoir — one more job, skipped here). Keys
+    need only ``<``: sorting, the duplicate check and the later
+    ``bisect_left`` compare with nothing else."""
+    sample_size = min(
+        _SAMPLE_POINTS_PER_PARTITION * num_partitions, _MAX_SAMPLE_SIZE
     )
+    per_part = math.ceil(3.0 * sample_size / max(1, keyed.getNumPartitions()))
 
-    def run_group(key: Any, vals: list):
-        if accs is not None:
-            accs[0].add(len(vals))
-        yield from reduce_fn(key, vals)
-        if accs is not None:
-            accs[1].add(len(vals))
-            accs[2].add(1)
-
-    def reduce_partition(part: Iterator[tuple[Any, Any]]):
-        # Group the key-sorted partition into (key, values) runs using
-        # ordering-equivalence (not hash equality): same group iff
-        # not (a<b) and not (b<a).
-        cur_key: Any = None
-        cur_vals: list[Any] | None = None
-        for k, v in part:
-            if cur_vals is not None and not (cur_key < k) and not (k < cur_key):
-                cur_vals.append(v)
+    def sketch(index: int, part: Iterator[tuple[Any, Any]]):
+        rng = random.Random(index)
+        n, sample = 0, []
+        for k, _ in part:
+            if n < per_part:
+                sample.append(k)
             else:
-                if cur_vals is not None:
-                    yield from run_group(cur_key, cur_vals)
-                cur_key, cur_vals = k, [v]
-        if cur_vals is not None:
-            yield from run_group(cur_key, cur_vals)
+                j = rng.randrange(n + 1)
+                if j < per_part:
+                    sample[j] = k
+            n += 1
+        yield n, sample
 
-    return reduce_partition
+    candidates = [
+        (k, n / len(sample))
+        for n, sample in keyed.mapPartitionsWithIndex(sketch).collect()
+        for k in sample
+    ]
+    parts = min(num_partitions, len(candidates))
+    if parts <= 1:
+        return []
+    candidates.sort(key=itemgetter(0))
+    step = sum(w for _, w in candidates) / parts
+    bounds: list = []
+    target, cum = step, 0.0
+    for key, weight in candidates:
+        cum += weight
+        if cum >= target and (not bounds or bounds[-1] < key):
+            bounds.append(key)
+            if len(bounds) == parts - 1:
+                break
+            target += step
+    return bounds
 
 
 def run_map_reduce(
@@ -198,7 +221,14 @@ def run_map_reduce(
                ordering-equal runs (K2 needs only ``<``, exactly the
                reference's type contract); reduce additionally sees
                keys in globally sorted order, matching the reference's
-               sorted IntermediateMap (MapReduceClient.h:61).
+               sorted IntermediateMap (MapReduceClient.h:61). With more
+               than one output partition, one sketch job runs first
+               (at call time) over the map without counters: a pair
+               count and a key sample per partition give the range
+               bounds. Then one shuffle job maps (with counters),
+               range-partitions, sorts each partition with PySpark's
+               spilling ExternalSorter, groups and reduces. Nothing is
+               persisted unless ``exact_reduce_keys`` is set.
 
     ``combiner_fn(v2, v2) -> v2`` (optional, hash mode only): map-side
     pre-reduction within each partition before the shuffle — the
@@ -217,21 +247,26 @@ def run_map_reduce(
     actually cross the wire — the same thing the reference's own
     per-file combiner makes its counters measure).
 
-    ``exact_reduce_keys`` (requires ``counters``; VERDICT r13 item 5):
-    restore the reference's exact KEY-weighted REDUCE denominator
+    ``exact_reduce_keys`` (requires ``counters``): restore the
+    reference's exact KEY-weighted REDUCE denominator
     (MapReduceFramework.cpp:190-195 packs the distinct intermediate
-    key count; reduceWrapper advances one per key at :157) by running
-    one distinct-key count job on the persisted intermediate before
-    the reduce starts — the shuffle→reduce flip is then observable at
-    the reference's exact granularity (``counters.key_total`` set;
-    JobState's reduce %% = keys reduced / key_total). Costs one extra
-    job and a persist of the intermediate (hash mode) or of the
-    sorted intermediate (sort mode, counted by ordering-equal runs so
-    keys still only need ``<``); default off — the zero-extra-job
+    key count; reduceWrapper advances one per key at :157). In either
+    key mode the grouped intermediate — one (key, values) record per
+    distinct key — is persisted with one pickled record per JVM
+    element, and ``counters.key_total`` is a count of those elements
+    taken in the JVM, so the count stage runs no second Python worker.
+    The reduce then replays the persisted groups, and JobState's
+    reduce percentage is keys reduced / key_total. Costs one extra job
+    and the persisted groups (released through
+    ``counters.cached_intermediate``); default off — the zero-extra-job
     pair-weighted sweep.
     """
     if exact_reduce_keys and counters is None:
         raise ValueError("exact_reduce_keys requires counters=")
+    if key_mode not in ("hash", "sort"):
+        raise ValueError(f"key_mode must be 'hash' or 'sort', got {key_mode!r}")
+    if combiner_fn is not None and key_mode != "hash":
+        raise ValueError("combiner_fn requires key_mode='hash' (hashable keys)")
     if isinstance(data, DataFrame):
         rdd = data.rdd.map(lambda row: (None, row))
     elif isinstance(data, RDD):
@@ -241,15 +276,16 @@ def run_map_reduce(
             raise ValueError("spark= is required when passing a plain list")
         rdd = spark.sparkContext.parallelize(data, num_partitions or None)
 
+    plain = rdd.flatMap(lambda kv: map_fn(kv[0], kv[1]))
     if counters is None:
-        intermediate = rdd.flatMap(lambda kv: map_fn(kv[0], kv[1]))
+        intermediate = plain
     else:
         mapped_acc, emitted_acc = counters.mapped, counters.emitted
         # with a combiner, "emitted" counts the pairs that actually
         # cross the shuffle (post-combine) — the reference's own
         # combining client calls emit2 on combined pairs too, so its
         # counters measure the same thing
-        count_emit_in_map = combiner_fn is None or key_mode != "hash"
+        count_emit_in_map = combiner_fn is None
 
         def _counted_map(kv):
             out = list(map_fn(kv[0], kv[1]))
@@ -273,90 +309,80 @@ def run_map_reduce(
                 return iter(acc.items())
 
             intermediate = intermediate.mapPartitions(_combine_partition)
-        if exact_reduce_keys:
-            # r14 (guide §2.4 "remove shuffles outright"): the distinct
-            # intermediate-key count IS the number of groupByKey
-            # groups, so count the GROUPED rdd instead of running a
-            # separate keys().distinct() job — that shape paid a
-            # second full shuffle (map → distinct-shuffle → count,
-            # then cache → groupByKey-shuffle → reduce); this one
-            # shuffles once and the reduce replays cached grouped
-            # blocks. Persist BEFORE counting so the count job
-            # computes (and caches) the instrumented map exactly once
-            # — counting an unpersisted lineage would re-run the map
-            # and double the accumulators; MEMORY_AND_DISK so an
-            # evicted block can't silently recompute (and re-count)
-            # it either (same rationale as the sink path,
-            # code-review r13). The cached handle is the caller's to
-            # release (same contract as the sort path below).
-            from pyspark import StorageLevel
+        grouped = intermediate.groupByKey(numPartitions=num_partitions)
+    else:
+        parts = num_partitions or intermediate._defaultReducePartitions()
+        # the sketch maps without counters, so only the shuffle pass
+        # below counts; one partition needs no bounds
+        bounds = [] if parts == 1 else _range_bounds(plain, parts)
 
-            grouped = intermediate.groupByKey(
-                numPartitions=num_partitions
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            counters.cached_intermediate = grouped
-            counters.key_total = grouped.count()
-        else:
-            grouped = intermediate.groupByKey(numPartitions=num_partitions)
-        if counters is None:
-            return grouped.flatMap(lambda kv: reduce_fn(kv[0], list(kv[1])))
-        shuffled_acc = counters.shuffled
-        reduced_acc, keys_acc = counters.reduced, counters.keys
+        def _group_runs(part: Iterator[tuple[Any, Any]]):
+            # Ordering-equivalent keys share a range and sit adjacent
+            # after the sort (k < key never holds), so a run continues
+            # while not (key < k): grouping by ordering, not hashing.
+            key: Any = None
+            vals: list[Any] | None = None
+            for k, v in part:
+                if vals is not None and not (key < k):
+                    vals.append(v)
+                else:
+                    if vals is not None:
+                        yield key, vals
+                    key, vals = k, [v]
+            if vals is not None:
+                yield key, vals
 
-        def _counted_reduce(kv):
-            vals = list(kv[1])
-            shuffled_acc.add(len(vals))
-            out = list(reduce_fn(kv[0], vals))
-            reduced_acc.add(len(vals))
-            keys_acc.add(1)
-            return out
+        grouped = intermediate.repartitionAndSortWithinPartitions(
+            parts, lambda k: bisect_left(bounds, k)
+        ).mapPartitions(_group_runs, preservesPartitioning=True)
 
-        return grouped.flatMap(_counted_reduce)
-    if combiner_fn is not None:
-        raise ValueError("combiner_fn requires key_mode='hash' (hashable keys)")
-    if key_mode == "sort":
-        if counters is not None:
-            # sortByKey's range partitioner SAMPLES the input with an
-            # extra job, re-running the instrumented flat-map and
-            # triple-counting the accumulators; persisting makes each
-            # input pair count once (pair-exact progress is the whole
-            # point of counters — and this path is the small generic-
-            # MR surface, not a 100 TB pipeline stage). The cached
-            # blocks are the CALLER'S to release once the output RDD
-            # is consumed — run_map_reduce_async unpersists after its
-            # collect via this handle (code-review r12: leaving them
-            # pinned accumulates executor storage across a job loop).
-            intermediate = intermediate.persist()
-            counters.cached_intermediate = intermediate
-        # Range partitioner: equal keys land in one partition by
-        # ordering alone; then adjacent-equal runs are the groups.
-        swkp = intermediate.sortByKey(numPartitions=num_partitions)
-        if exact_reduce_keys:
-            # Keys in sort mode need only ``<`` (the reference's type
-            # contract), so the distinct count is ordering-based: the
-            # range partitioner confines each equivalence class to one
-            # partition, so summing ordering-equal RUNS per sorted
-            # partition counts distinct keys without hashing. Persist
-            # the sorted intermediate so the count and the reduce
-            # share one sort (caller unpersists via cached_sorted).
-            swkp = swkp.persist()
-            counters.cached_sorted = swkp
+    if exact_reduce_keys:
+        # One pickled group per JVM element, so a JVM count of the
+        # persisted RDD is the distinct-key count. Persist BEFORE
+        # counting so the count job computes (and counts) the
+        # instrumented map exactly once; MEMORY_AND_DISK so an evicted
+        # block is never recomputed (and recounted) by the reduce.
+        grouped = grouped._reserialize(
+            BatchedSerializer(CPickleSerializer(), 1)
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        counters.cached_intermediate = grouped
+        counters.key_total = grouped._jrdd.count()
 
-            def _count_runs(part: Iterator[tuple[Any, Any]]):
-                n = 0
-                cur: Any = None
-                have = False
-                for k, _ in part:
-                    if not have or (cur < k) or (k < cur):
-                        n += 1
-                        cur, have = k, True
-                yield n
+    if counters is None:
+        return grouped.flatMap(lambda kv: reduce_fn(kv[0], list(kv[1])))
+    shuffled_acc = counters.shuffled
+    reduced_acc, keys_acc = counters.reduced, counters.keys
 
-            counters.key_total = swkp.mapPartitions(_count_runs).sum()
-        return swkp.mapPartitions(
-            _make_sorted_run_reducer(reduce_fn, counters)
+    def _counted_reduce(kv):
+        vals = list(kv[1])
+        shuffled_acc.add(len(vals))
+        out = list(reduce_fn(kv[0], vals))
+        reduced_acc.add(len(vals))
+        keys_acc.add(1)
+        return out
+
+    return grouped.flatMap(_counted_reduce)
+
+
+def _check_identity_schema(df: DataFrame, intermediate_schema: Any) -> None:
+    """``map_batches=None`` feeds ``df`` to the reduce as is, so its
+    columns must be the declared intermediate ones: same names, same
+    order, same types (nullability aside). A mismatch would hand the
+    reduce other pandas dtypes than the schema promises."""
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    want = (
+        intermediate_schema
+        if isinstance(intermediate_schema, StructType)
+        else _parse_datatype_string(intermediate_schema)
+    )
+    have = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+    declared = [(f.name, f.dataType.simpleString()) for f in want.fields]
+    if have != declared:
+        raise ValueError(
+            "map_batches=None needs the input to match intermediate_schema: "
+            f"input has {have}, intermediate_schema declares {declared}"
         )
-    raise ValueError(f"key_mode must be 'hash' or 'sort', got {key_mode!r}")
 
 
 def map_reduce_df(
@@ -367,7 +393,6 @@ def map_reduce_df(
     intermediate_schema: Any,
     output_schema: Any,
     key_cols: list[str] | str,
-    partition_batched: bool = False,
 ) -> DataFrame:
     """Vectorized MapReduce over typed columns (the Spark-first path).
 
@@ -375,107 +400,95 @@ def map_reduce_df(
     (contract point 1: a batch in, any number of rows out), executed by
     ``mapInPandas`` with Arrow transfer. ``reduce_group(pdf) -> pdf``
     is the holistic reduce (contract point 2: the WHOLE group arrives
-    as one pandas DataFrame; contract point 3: return any number of
-    rows), executed by ``groupBy().applyInPandas``.
+    as one pandas DataFrame with a fresh 0..n-1 index; contract point
+    3: return any number of rows).
 
     ``map_batches=None`` declares the IDENTITY map phase: the input
     relation already has the intermediate shape, so the JVM→Python→JVM
     Arrow round-trip that a ``yield from it`` body would pay is
-    skipped outright — the identity is a no-op on the data, making
-    the skip semantics-preserving by construction (guide §4: the
-    boundary you don't cross is the cheapest). The intermediate
-    relation is then the input itself (columnar scan straight into
-    the shuffle), and only the reduce side crosses into Python.
+    skipped. The input's column names and types must then equal
+    ``intermediate_schema``, else ``ValueError``.
 
-    The groupBy is one hash shuffle with AQE skew handling; at 100 TB
-    the per-group pandas frame must fit in executor memory — the same
-    holistic-reduce memory contract the reference has (all values for a
-    key in RAM, MapReduceClient.h:83), made explicit.
+    The reduce is a sorted stream: ``repartition(keys)`` co-locates
+    each group in one partition, ``sortWithinPartitions(keys)`` makes
+    it contiguous, and ONE ``mapInPandas`` generator per partition
+    walks the Arrow batches, carrying the group open at a batch's end
+    into the next — the JVM hands Python whole batches, not one group
+    at a time, and memory is bounded by a batch plus the largest group
+    (the holistic contract the reference has too: all values for a key
+    in RAM, MapReduceClient.h:83). Groups follow Spark's groupBy
+    equality: NULL is its own group, NaN equals NaN and -0.0 equals
+    0.0. Pandas reads a NULL float as NaN, so a null flag per key
+    column, computed in the JVM, rides through the sort and tells the
+    two apart; the flags are dropped before ``reduce_group`` sees the
+    group.
     """
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    intermediate = (
-        df
-        if map_batches is None
-        else df.mapInPandas(map_batches, schema=intermediate_schema)
-    )
-    if not partition_batched:
-        return intermediate.groupBy(*key_cols).applyInPandas(
-            reduce_group, schema=output_schema
-        )
+    from pyspark.sql import functions as F
 
-    # Partition-batched reduce: co-locate groups with repartition(key)
-    # + sortWithinPartitions(key), then stream Arrow batches through
-    # ONE pandas generator per partition, carrying the tail group
-    # across batch boundaries — O(batches) Python crossings instead of
-    # O(groups), memory bounded by (batch + largest group), same
-    # holistic semantics (each group wholly inside one partition and
-    # contiguous after the sort).
-    keys = list(key_cols)
+    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    if map_batches is None:
+        _check_identity_schema(df, intermediate_schema)
+        intermediate = df
+    else:
+        intermediate = df.mapInPandas(map_batches, schema=intermediate_schema)
+    taken = set(intermediate.columns)
+    flags = []
+    for i in range(len(keys)):
+        name = f"_key_is_null_{i}"
+        while name in taken:
+            name = "_" + name
+        flags.append(name)
+    cols = keys + flags
 
     def reduce_partition(batches):
+        import numpy as np
         import pandas as pd
 
-        # The carried (batch-spanning) group accumulates as a LIST of
-        # fragments, concatenated ONCE when the group completes: the
-        # old concat-carry-into-every-batch version copied the whole
-        # accumulated group per batch, O(G²/B) row copies for a
-        # G-row skewed key — exactly the hot-key case this path
-        # exists for (code-review r6). NULL keys form a real group
-        # after the sort, and `== NaN` is always False, so key
-        # matching is null-safe throughout or a null-key group
-        # spanning a boundary would be reduced twice.
+        def changes(kf) -> np.ndarray:
+            """For each row of ``kf`` (key and flag columns) after the
+            first: True where its group differs from the row before."""
+            brk = np.zeros(len(kf) - 1, dtype=bool)
+            for k, f in zip(keys, flags):
+                v = kf[k].to_numpy()
+                null = kf[f].to_numpy(dtype=bool)
+                same = (v[1:] == v[:-1]) | (pd.isna(v[1:]) & pd.isna(v[:-1]))
+                brk |= (null[1:] != null[:-1]) | ~(null[1:] | same)
+            return brk
+
+        def reduce_frags(frags):
+            group = frags[0] if len(frags) == 1 else pd.concat(frags)
+            return reduce_group(group.reset_index(drop=True))
+
+        # The open group is a LIST of fragments, concatenated once when
+        # it completes, so a G-row group spanning many batches costs
+        # O(G) copies, not O(G^2 / batch).
         frags: list = []
-        frag_key: tuple | None = None
-
-        def same_key(pdf, key):
-            m = pd.Series(True, index=pdf.index)
-            for k, v in zip(keys, key):
-                if pd.isna(v):
-                    m &= pdf[k].isna()
-                else:
-                    m &= pdf[k] == v
-            return m
-
+        tail = None  # key and flag columns of the open group's last row
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if frags:
-                # Peel the prefix continuing the carried group (equal
-                # keys are contiguous after the sort).
-                cont = same_key(pdf, frag_key)
-                prefix = pdf[cont]
-                if len(prefix):
-                    frags.append(prefix)
-                pdf = pdf[~cont]
-                if len(pdf) == 0:
-                    continue  # group still open; fragments held
-                yield reduce_group(pd.concat(frags, ignore_index=True))
-                frags, frag_key = [], None
-            # Rows with the final key value may continue in the next
-            # batch — hold them back as the new carried group.
-            last_key = tuple(pdf[k].iloc[-1] for k in keys)
-            is_tail = same_key(pdf, last_key)
-            done = pdf[~is_tail]
-            if len(done):
-                # dropna=False: a NULL key is a real group (Spark's
-                # groupBy keeps it); pandas' default would drop it.
-                # reset_index: every other path hands reduce_group a
-                # 0..n-1 RangeIndex (applyInPandas does, and so does
-                # the pd.concat(ignore_index=True) batch-spanning
-                # path above); a mid-batch group must not be the one
-                # place label-indexing callbacks break (code-review
-                # r8).
-                for _, group in done.groupby(keys, sort=False, dropna=False):
-                    yield reduce_group(group.reset_index(drop=True))
-            frags, frag_key = [pdf[is_tail]], last_key
+            kf = pdf[cols]
+            if tail is None:
+                starts = np.concatenate([[True], changes(kf)])
+            else:
+                starts = changes(pd.concat([tail, kf], ignore_index=True))
+            data = pdf.drop(columns=flags)
+            edges = list(np.flatnonzero(starts)) + [len(pdf)]
+            if edges[0] > 0:  # leading rows continue the open group
+                frags.append(data.iloc[: edges[0]])
+            for lo, hi in zip(edges, edges[1:]):
+                if frags:
+                    yield reduce_frags(frags)
+                frags = [data.iloc[lo:hi]]
+            tail = kf.iloc[-1:]
         if frags:
-            carried = pd.concat(frags, ignore_index=True)
-            if len(carried):
-                yield reduce_group(carried)
+            yield reduce_frags(frags)
 
     return (
-        intermediate.repartition(*keys)
+        intermediate.withColumns(
+            {f: F.isnull(k) for k, f in zip(keys, flags)}
+        )
+        .repartition(*keys)
         .sortWithinPartitions(*keys)
         .mapInPandas(reduce_partition, schema=output_schema)
     )

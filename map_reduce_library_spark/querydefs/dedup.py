@@ -24,6 +24,7 @@ from map_reduce_library_spark.operators.dedup import (
 )
 from map_reduce_library_spark.queries import register
 from map_reduce_library_spark.querydefs._shared import shared_checkpoint
+from map_reduce_library_spark.session import shuffle_partitions
 from map_reduce_library_spark.tables import load_table
 
 JACCARD_THRESHOLD = 0.8
@@ -1228,7 +1229,7 @@ def pagerank_near_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (= next round's join key), making the ONE fundamental shuffle
     # per round — transposing src-grouped contributions to
     # dst-grouped sums — the only per-round exchange (guide §2.4/§3).
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    shuffle_p = shuffle_partitions(spark)
     edges = (
         und.join(
             deg.select(

@@ -85,7 +85,7 @@ def mr_combiner_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mr_sortmode_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ordering-only key path (key_mode='sort'): range-partition +
-    sortByKey, then adjacent ordering-equal runs form the groups —
+    in-partition sort, then adjacent ordering-equal runs form the groups —
     exactly the reference's sorted IntermediateMap contract
     (MapReduceClient.h:50-54,61; MapReduceFramework.cpp:72-87), which
     needs only ``<`` on keys, never hashing. Same oracle as the hash
@@ -163,7 +163,7 @@ def mr_holistic_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holistic (non-associative) reduce — the capability that makes
     the reference's reduce strictly more general than pairwise
     combiners (MapReduceClient.h:77,83): per-user MEDIAN via the
-    vectorized applyInPandas path. The map phase is the declared
+    vectorized sorted-stream path. The map phase is the declared
     IDENTITY (``map_batches=None``), so the input's Arrow round-trip
     through a ``yield from`` body is skipped — the scan feeds the
     key shuffle directly and only the holistic reduce crosses into
@@ -200,7 +200,6 @@ def mr_holistic_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         intermediate_schema="user_id bigint, value double",
         output_schema="user_id bigint, median_value double, n bigint",
         key_cols="user_id",
-        partition_batched=True,  # sorted-stream reduce: 1.6x faster
     )
 
 

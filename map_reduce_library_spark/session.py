@@ -34,6 +34,22 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+# Spark's documented default for spark.sql.shuffle.partitions.
+_SPARK_SHUFFLE_PARTITIONS_DEFAULT = 200
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as a positive
+    int. A deployment may set a non-integer there (``auto`` lets the
+    platform choose); code that needs a number then gets Spark's own
+    default, 200, instead of a ValueError."""
+    try:
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return _SPARK_SHUFFLE_PARTITIONS_DEFAULT
+    return n if n > 0 else _SPARK_SHUFFLE_PARTITIONS_DEFAULT
+
+
 def _resolve_master(
     master: str | None, managed: bool | None = None
 ) -> str | None:

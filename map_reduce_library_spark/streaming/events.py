@@ -70,9 +70,10 @@ def drain_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
                 return n
         except ValueError:
             pass
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    from map_reduce_library_spark.session import shuffle_partitions
     from map_reduce_library_spark.tables import table_path
 
+    cur = shuffle_partitions(spark)
     try:
         nbytes = os.path.getsize(table_path(sf_dir, "events"))
     except OSError:

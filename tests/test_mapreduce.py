@@ -300,8 +300,9 @@ def test_sort_mode_global_order_across_partitions(spark):
 
 
 def test_partition_batched_reduce_matches_grouped(spark):
-    # Fast path (repartition + sorted streaming groupby) must equal
-    # the applyInPandas path exactly, including cross-batch groups.
+    # The sorted-stream reduce (repartition + sorted streaming groupby)
+    # must equal a per-group applyInPandas reference exactly, including
+    # groups that span Arrow batches.
     df = spark.range(0, 50000).selectExpr(
         "id % 997 AS k", "cast(id AS double) AS v"
     )
@@ -320,26 +321,25 @@ def test_partition_batched_reduce_matches_grouped(spark):
         output_schema="k long, med double, n long",
         key_cols="k",
     )
-    slow = {
+    reference = {
         (r.k, r.med, r.n)
-        for r in map_reduce_df(df, ident, med, **kw).collect()
+        for r in df.groupBy("k")
+        .applyInPandas(med, schema=kw["output_schema"])
+        .collect()
     }
     fast = {
         (r.k, r.med, r.n)
-        for r in map_reduce_df(df, ident, med, partition_batched=True, **kw).collect()
+        for r in map_reduce_df(df, ident, med, **kw).collect()
     }
-    assert fast == slow and len(fast) == 997
+    assert fast == reference and len(fast) == 997
     # map_batches=None declares the identity map WITHOUT the Arrow
-    # round-trip (r15: the skip must be observationally identical to
-    # an explicit `yield from` body, on both reduce paths).
-    for pb in (False, True):
-        fused = {
-            (r.k, r.med, r.n)
-            for r in map_reduce_df(
-                df, None, med, partition_batched=pb, **kw
-            ).collect()
-        }
-        assert fused == slow
+    # round-trip: observationally identical to an explicit
+    # `yield from` body.
+    fused = {
+        (r.k, r.med, r.n)
+        for r in map_reduce_df(df, None, med, **kw).collect()
+    }
+    assert fused == reference
 
 
 def test_partition_batched_null_key_group_single_reduce(spark):
@@ -368,7 +368,6 @@ def test_partition_batched_null_key_group_single_reduce(spark):
             intermediate_schema="k long, v double",
             output_schema="k long, n long",
             key_cols="k",
-            partition_batched=True,
         ).collect()
         rows = {(r.k, r.n) for r in out}
         # exactly one output row for the NULL group, with the full count
@@ -383,7 +382,7 @@ def test_partition_batched_groups_get_range_index(spark):
     """code-review r8: every path must hand reduce_group a 0..n-1
     RangeIndex (applyInPandas does; so does the batch-spanning concat)
     — a label-indexing callback like pdf.loc[0] must not break only
-    for mid-batch groups in partition_batched mode."""
+    for mid-batch groups of the sorted-stream reduce."""
     df = spark.range(0, 5000).selectExpr(
         "id % 23 AS k", "cast(id AS double) AS v"
     )
@@ -404,9 +403,7 @@ def test_partition_batched_groups_get_range_index(spark):
         output_schema="k long, v0 double, n long",
         key_cols="k",
     )
-    rows = map_reduce_df(
-        df, ident, first_by_label, partition_batched=True, **kw
-    ).collect()
+    rows = map_reduce_df(df, ident, first_by_label, **kw).collect()
     assert len(rows) == 23
     assert sum(r.n for r in rows) == 5000
 
@@ -736,11 +733,9 @@ def test_pair_counters_exact_under_task_retry(tmp_path):
 
 
 def test_sink_mode_sort_key_mode_interplay(spark, tmp_path):
-    """sink= composes with key_mode='sort': the sort path persists its
-    instrumented intermediate (range-partitioner sample pass dedup)
-    and the sink path writes the output — both caches must be
-    released, counters stay exact, and the parquet holds the grouped
-    answer."""
+    """sink= composes with key_mode='sort': the range sketch and the
+    sink write leave nothing persisted once the handle closes,
+    counters stay exact, and the parquet holds the grouped answer."""
     from map_reduce_library_spark.core.job import run_map_reduce_async
 
     data = [(None, f"k{i % 4}") for i in range(80)]
@@ -752,6 +747,7 @@ def test_sink_mode_sort_key_mode_interplay(spark, tmp_path):
         yield (k, sum(vals))
 
     sink = str(tmp_path / "mr_sorted")
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
     handle = run_map_reduce_async(
         spark, data, map_fn, reduce_fn, key_mode="sort",
         num_partitions=4, sink=sink,
@@ -767,11 +763,10 @@ def test_sink_mode_sort_key_mode_interplay(spark, tmp_path):
     assert c.emitted.value == 80
     assert c.reduced.value == 80
     assert c.keys.value == 4
-    # the sort path's persisted intermediate was handed to the caller
-    # and released by the action's finally block
-    cached = c.cached_intermediate
-    assert cached is not None
-    assert not cached.is_cached, "sort-mode intermediate left pinned"
+    handle.close_job_handle()
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted, (
+        "sort-mode sink job left an RDD pinned"
+    )
 
 
 def test_pair_progress_handoff_never_consults_tracker(spark):
@@ -900,10 +895,11 @@ def test_exact_reduce_keys_hash_mode(spark):
 
 
 def test_exact_reduce_keys_sort_mode_ordering_only(spark):
-    """Sort mode counts distinct keys by ORDERING-equal runs on the
-    range-partitioned sorted intermediate — keys need only ``<``
-    (the reference's type contract), no hashing, and the sorted RDD
-    is shared between the count and the reduce then released."""
+    """Sort mode groups ORDERING-equal runs on the range-partitioned
+    sorted intermediate — keys need only ``<`` (the reference's type
+    contract), no hashing — and the distinct-key count is a count of
+    those groups; the persisted groups are released when the handle
+    closes."""
     from map_reduce_library_spark.core.job import run_map_reduce_async
 
     data = [(None, i) for i in range(90)]
@@ -914,6 +910,7 @@ def test_exact_reduce_keys_sort_mode_ordering_only(spark):
     def reduce_fn(k, vals):
         yield (k.s, sum(vals))
 
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
     handle = run_map_reduce_async(
         spark, data, map_fn, reduce_fn, key_mode="sort",
         num_partitions=4, exact_reduce_keys=True,
@@ -924,8 +921,8 @@ def test_exact_reduce_keys_sort_mode_ordering_only(spark):
     assert c.key_total == 9
     assert c.keys.value == 9
     assert c.mapped.value == 90  # persist kept the count single-pass
-    for cached in (c.cached_intermediate, c.cached_sorted):
-        assert cached is not None and not cached.is_cached
+    handle.close_job_handle()
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
 
 
 def test_counter_overshoot_from_duplicate_delivery_stays_clamped(spark):
@@ -1116,3 +1113,190 @@ def test_exact_reduce_keys_with_combiner(spark):
     assert c.emitted.value == c.shuffled.value == c.reduced.value
     cached = c.cached_intermediate
     assert cached is not None and not cached.is_cached
+
+
+def test_sorted_stream_reduce_separates_null_and_nan_keys(spark):
+    """NULL and NaN are different groups (Spark's groupBy keeps them
+    apart; pandas reads both as NaN), -0.0 and 0.0 are one group: the
+    sorted-stream reduce must match a per-group applyInPandas
+    reference on exactly these keys, also when every row arrives in
+    its own Arrow batch (each group then spans batches)."""
+    nan = float("nan")
+    keys = [None, None, nan, nan, -0.0, 0.0, 1.0]
+    df = spark.createDataFrame(
+        [(k, float(i + 1)) for i, k in enumerate(keys)], "k double, v double"
+    )
+
+    def agg(pdf):
+        return pd.DataFrame({"n": [len(pdf)], "s": [pdf["v"].sum()]})
+
+    schema = "n long, s double"
+    reference = sorted(
+        tuple(r) for r in df.groupBy("k").applyInPandas(agg, schema).collect()
+    )
+    # NULL (v 1+2), NaN (3+4), zero (5+6), one (7)
+    assert reference == [(1, 7.0), (2, 3.0), (2, 7.0), (2, 11.0)]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf, "10000")
+    try:
+        for batch_rows in (old, "1"):
+            spark.conf.set(conf, batch_rows)
+            got = sorted(
+                tuple(r)
+                for r in map_reduce_df(
+                    df, None, agg, intermediate_schema="k double, v double",
+                    output_schema=schema, key_cols="k",
+                ).collect()
+            )
+            assert got == reference, batch_rows
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_sorted_stream_reduce_hides_null_flags_and_allows_empty_output(spark):
+    """With two key columns, reduce_group sees exactly the intermediate
+    columns (the JVM null flags are dropped first), a NULL in either
+    key column makes its own group, and a group may emit zero rows."""
+    df = spark.createDataFrame(
+        [("a", 1.0, 1), ("a", 1.0, 2), ("a", None, 3), ("b", 2.0, 4),
+         (None, 2.0, 5)],
+        "k string, j double, v long",
+    )
+    seen = spark.sparkContext.accumulator(0)
+
+    def reduce_group(pdf):
+        if list(pdf.columns) != ["k", "j", "v"]:
+            raise AssertionError(f"reduce saw columns {list(pdf.columns)}")
+        seen.add(1)
+        if pdf["k"].iloc[0] == "b":
+            return pd.DataFrame()
+        return pd.DataFrame({"k": [pdf["k"].iloc[0]], "n": [len(pdf)]})
+
+    out = map_reduce_df(
+        df, None, reduce_group,
+        intermediate_schema="k string, j double, v long",
+        output_schema="k string, n long", key_cols=["k", "j"],
+    ).collect()
+    assert sorted((r.k or "", r.n) for r in out) == [
+        ("", 1), ("a", 1), ("a", 2),
+    ]
+    assert seen.value == 4
+
+
+def test_identity_map_checks_intermediate_schema(spark):
+    """map_batches=None feeds the input to the reduce unchanged, so an
+    input whose columns or types differ from intermediate_schema is
+    refused instead of silently reducing other dtypes."""
+    df = spark.createDataFrame([("a", 1)], "k string, v long")
+
+    def reduce_group(pdf):
+        return pdf
+
+    kw = dict(output_schema="k string, v long", key_cols="k")
+    for declared in ("k string, v double", "k string, w long", "v long, k string"):
+        with pytest.raises(ValueError, match="intermediate_schema"):
+            map_reduce_df(
+                df, None, reduce_group, intermediate_schema=declared, **kw
+            )
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    as_struct = StructType(
+        [StructField("k", StringType(), False), StructField("v", LongType())]
+    )
+    out = map_reduce_df(
+        df, None, reduce_group, intermediate_schema=as_struct, **kw
+    ).collect()
+    assert [tuple(r) for r in out] == [("a", 1)]
+
+
+def _jobs_started_by(spark, fn) -> int:
+    """Run ``fn`` under a fresh job group; return how many Spark jobs
+    it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sort_mode_job_count(spark):
+    """Sort mode runs one sketch job for its range bounds plus the
+    shuffle job itself; with one output partition there is nothing to
+    sketch."""
+    from map_reduce_library_spark.core.mapreduce import PairCounters
+
+    data = [(None, f"k{i % 13}") for i in range(200)]
+
+    def m(_k, v):
+        yield (OrderOnlyKey(v), 1)
+
+    def r(k, vs):
+        yield (k.s, sum(vs))
+
+    want = {f"k{i}": len(range(i, 200, 13)) for i in range(13)}
+    for parts, jobs in ((4, 2), (1, 1)):
+        c = PairCounters(spark, len(data))
+        out: list = []
+        n = _jobs_started_by(
+            spark,
+            lambda: out.extend(
+                run_map_reduce(
+                    data, m, r, spark=spark, key_mode="sort",
+                    num_partitions=parts, counters=c,
+                ).collect()
+            ),
+        )
+        assert dict(out) == want
+        assert n == jobs, (parts, n)
+        # the sketch maps without counters: every pair counted once
+        assert (c.mapped.value, c.emitted.value) == (200, 200)
+        assert (c.shuffled.value, c.reduced.value, c.keys.value) == (
+            200, 200, 13,
+        )
+        assert c.cached_intermediate is None
+
+
+def test_exact_reduce_keys_hash_mode_job_count(spark):
+    """Hash mode with exact keys: the key-count job and the reduce job,
+    nothing else; the persisted groups are released on close."""
+    from map_reduce_library_spark.core.job import run_map_reduce_async
+
+    data = [(None, i) for i in range(100)]
+    sc = spark.sparkContext
+    persisted = len(sc._jsc.getPersistentRDDs())
+    handle = run_map_reduce_async(
+        spark, data, lambda k, v: [(v % 7, v)],
+        lambda k, vs: [(k, len(vs))], num_partitions=4,
+        exact_reduce_keys=True,
+    )
+    out = handle.close_job_handle()
+    assert sorted(out) == [(k, len(range(k, 100, 7))) for k in range(7)]
+    assert handle.counters.key_total == 7
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(handle._group)) == 2
+    assert len(sc._jsc.getPersistentRDDs()) == persisted
+
+
+def test_range_bounds_weighted_and_deduplicated(spark):
+    """The sketch's bounds split the pair weight evenly and never
+    repeat an ordering-equal key, so a hot key cannot be cut across
+    partitions; keys need only ``<``."""
+    from map_reduce_library_spark.core.mapreduce import _range_bounds
+
+    # one hot key holding 90% of the pairs, then 100 light keys
+    pairs = [(OrderOnlyKey("a"), 1)] * 900 + [
+        (OrderOnlyKey(f"b{i:03d}"), 1) for i in range(100)
+    ]
+    rdd = spark.sparkContext.parallelize(pairs, 4)
+    bounds = _range_bounds(rdd, 4)
+    names = [b.s for b in bounds]
+    assert names == sorted(set(names))
+    assert 1 <= len(bounds) <= 3
+    assert names[0] == "a"  # the hot key closes the first range
+    assert _range_bounds(spark.sparkContext.parallelize([], 2), 4) == []

@@ -52,3 +52,34 @@ def test_local_default_uses_validated_cpus(monkeypatch):
 def test_local_default_without_env(monkeypatch):
     _clear(monkeypatch)
     assert _resolve_master(None, managed=False) == "local[*]"
+
+
+class _StubConf:
+    def __init__(self, value):
+        self.value = value
+
+    def get(self, key, *default):
+        assert key == "spark.sql.shuffle.partitions"
+        return self.value
+
+
+class _StubSession:
+    def __init__(self, value):
+        self.conf = _StubConf(value)
+
+
+def test_shuffle_partitions_falls_back_on_non_integer_conf(monkeypatch):
+    """A deployment may set spark.sql.shuffle.partitions to ``auto``
+    (open-source Spark refuses it on a real session, hence the stub):
+    callers get Spark's default instead of a ValueError, at both call
+    sites that need a number."""
+    from map_reduce_library_spark.session import shuffle_partitions
+    from map_reduce_library_spark.streaming.events import (
+        drain_shuffle_partitions,
+    )
+
+    assert shuffle_partitions(_StubSession("16")) == 16
+    for bad in ("auto", "", "0", "-3", None):
+        assert shuffle_partitions(_StubSession(bad)) == 200
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
+    assert drain_shuffle_partitions(_StubSession("auto"), "/nonexistent") == 200

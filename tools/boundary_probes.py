@@ -20,13 +20,38 @@ Contract points exercised (SURVEY.md §2A/§2B):
     get_job_state mid-flight, wait_for_job returns the result,
     close_job_handle is idempotent (double close, the reference's
     closeJobHandle contract).
+  * sort mode with exact_reduce_keys on a key type that has only
+    ``<``: counters and key_total exact, and no RDD left persisted
+    once the handle is closed.
 """
+import os
 import sys
+from pathlib import Path
 
 sys.path.insert(0, "/root/repo")
 
 
+class OrderOnlyKey:
+    """A key with ordering only (no hashing), the reference's K2
+    contract. Imported as ``tools.boundary_probes.OrderOnlyKey`` so
+    Python workers can unpickle it."""
+
+    __hash__ = None  # type: ignore[assignment]
+
+    def __init__(self, s):
+        self.s = s
+
+    def __lt__(self, other):
+        return self.s < other.s
+
+
 def main() -> int:
+    # the driver and the workers import the probe's key class from the
+    # repo root
+    repo = str(Path(__file__).resolve().parents[1])
+    sys.path.insert(0, repo)
+    prev = os.environ.get("PYTHONPATH")
+    os.environ["PYTHONPATH"] = f"{repo}{os.pathsep}{prev}" if prev else repo
     from pyspark.sql import SparkSession
 
     spark = (
@@ -121,6 +146,30 @@ def main() -> int:
     st = h.get_job_state()
     assert st.stage.name == "REDUCE" and st.percentage == 100.0
     print("PROBE pair-level counters exact (60 in / 60 emitted / 6 keys)")
+
+    from tools.boundary_probes import OrderOnlyKey as Key
+
+    sc = spark.sparkContext
+    persisted = len(sc._jsc.getPersistentRDDs())
+    h = run_map_reduce_async(
+        spark,
+        [(None, i) for i in range(90)],
+        lambda k, v: [(Key(v % 9), 1)],
+        lambda k, vs: [(k.s, sum(vs))],
+        key_mode="sort",
+        num_partitions=4,
+        exact_reduce_keys=True,
+    )
+    out = h.close_job_handle()
+    assert sorted(out) == [(k, 10) for k in range(9)]
+    c = h.counters
+    got = (
+        c.mapped.value, c.emitted.value, c.shuffled.value,
+        c.reduced.value, c.keys.value, c.key_total,
+    )
+    assert got == (90, 90, 90, 90, 9, 9), got
+    assert len(sc._jsc.getPersistentRDDs()) == persisted, "RDD left pinned"
+    print("PROBE sort mode exact keys: counters exact, key_total 9, nothing pinned")
     print("PROBES ALL GREEN")
     return 0
 
