@@ -1196,12 +1196,13 @@ def pagerank_near_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # was a full extra exchange re-proving it (guide §2.4: a distinct
     # on data that is already unique). Degree counts depend on edge
     # multiplicity, so this rests on that contract, which the shared
-    # checkpoint materializes.
+    # checkpoint materializes. Not cached: it only feeds deg and
+    # edges, which are.
     und = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).union(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).cache()
+    )
     # Every edge endpoint is a node, so the degree table IS the node
     # set; carrying (node, d) inside the ranks relation computes
     # rank/deg in-row and removes one join per round.

@@ -127,12 +127,14 @@ def run_to_memory(
     return out
 
 
-# (applicationId, abs sf_dir) -> raw events footer schema. The same
-# metadata-memoization contract as tables._TABLE_CACHE (guide §6
-# listing / §7.3 driver planning cost): the batch-read schema probe
-# measured 77 ms of driver time per call warm, and every streaming
-# query invocation pays it once — schema only, never data; keyed by
-# applicationId so a restarted session re-probes.
+# (applicationId, abs sf_dir, events size, events mtime_ns) -> raw
+# events footer schema. The same metadata-memoization contract as
+# tables._TABLE_CACHE (guide §6 listing / §7.3 driver planning cost):
+# the batch-read schema probe measured 77 ms of driver time per call
+# warm, and every streaming query invocation pays it once — schema
+# only, never data; keyed by applicationId so a restarted session
+# re-probes, and by the file's size and mtime so an events.parquet
+# rewritten in place (say NANOS -> MICROS ts) is probed again.
 _STREAM_SCHEMA_CACHE: dict = {}
 
 
@@ -151,12 +153,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # int64 under nanosAsLong) and as plain TIMESTAMP(MICROS), so probe
     # the actual footer with a batch read (one metadata-only read at
     # stream-construction time) instead of hardcoding either layout.
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+    events = table_path(sf_dir, "events")
+    try:
+        st = os.stat(events)
+        stamp = (st.st_size, st.st_mtime_ns)
+    except OSError:  # missing: the probe below raises Spark's error
+        stamp = None
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), stamp)
     batch_schema = _STREAM_SCHEMA_CACHE.get(key)
     if batch_schema is None:
-        batch_schema = spark.read.parquet(
-            table_path(sf_dir, "events")
-        ).schema
+        batch_schema = spark.read.parquet(events).schema
         _STREAM_SCHEMA_CACHE[key] = batch_schema
     # The file source wants a directory; select just events.parquet
     # out of the sf_dir with a glob filter. ts normalization is the

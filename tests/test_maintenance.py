@@ -132,12 +132,19 @@ def test_snapshot_upsert_merge_is_single_lazy_plan(spark):
         [(1, "new"), (99, "ins")], "k bigint, v string"
     )
     tracker = spark.sparkContext.statusTracker()
+    # the status tracker learns of a job from the listener bus; drain
+    # it before each count so an earlier test's queued job start is
+    # not counted as launched by the call
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
     before = len(tracker.getJobIdsForGroup(None))
     merged = snapshot_upsert(base, delta, ["k"], validate=False)
+    bus.waitUntilEmpty()
     assert len(tracker.getJobIdsForGroup(None)) == before, (
         "validate=False still launched an eager job"
     )
     snapshot_upsert(base, delta, ["k"])  # default probes eagerly
+    bus.waitUntilEmpty()
     assert len(tracker.getJobIdsForGroup(None)) > before
     assert merged.count() == 11
 

@@ -130,3 +130,51 @@ def test_drain_shuffle_partitions_policy_and_restore(spark):
     # the scoped conf must not leak out of the drain
     streaming_hourly_stats(spark, SF_CORRECTNESS)
     assert spark.conf.get(key) == before
+
+
+def test_stream_schema_reprobed_after_events_rewrite(spark, tmp_path):
+    """The stream schema probe is memoized per application, but an
+    events.parquet rewritten in place with another ts layout (NANOS,
+    read as int64, then MICROS) must be probed again: a stale schema
+    would stream the new file with the old ts type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from map_reduce_library_spark.streaming.events import (
+        read_events_stream,
+        run_to_memory,
+    )
+    from map_reduce_library_spark.tables import table_path
+
+    sf = str(tmp_path)
+
+    def write_events(ts_micros, unit):
+        scale = 1000 if unit == "ns" else 1
+        n = len(ts_micros)
+        table = pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array([t * scale for t in ts_micros], pa.timestamp(unit)),
+            "user_id": pa.array([1] * n, pa.int64()),
+            "event_type": pa.array(["view"] * n),
+            "value": pa.array([1.0] * n),
+            "props": pa.array(["{}"] * n),
+        })
+        pq.write_table(table, table_path(sf, "events"))
+        assert pq.ParquetFile(table_path(sf, "events")).schema_arrow.field(
+            "ts"
+        ).type == pa.timestamp(unit)
+
+    def streamed_micros():
+        stream = read_events_stream(spark, sf).select(
+            "event_id", F.unix_micros("ts").alias("us")
+        )
+        rows = run_to_memory(stream, "schema_reprobe", "append").collect()
+        return sorted((r.event_id, r.us) for r in rows)
+
+    nanos_ts = [1_700_000_000_123_456, 1_700_000_060_000_001]
+    write_events(nanos_ts, "ns")
+    assert streamed_micros() == list(enumerate(nanos_ts))
+    micros_ts = [1_700_000_100_000_002, 1_700_000_200_654_321, 1_700_000_300_000_000]
+    write_events(micros_ts, "us")
+    assert streamed_micros() == list(enumerate(micros_ts))

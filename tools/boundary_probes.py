@@ -23,9 +23,14 @@ Contract points exercised (SURVEY.md §2A/§2B):
   * sort mode with exact_reduce_keys on a key type that has only
     ``<``: counters and key_total exact, and no RDD left persisted
     once the handle is closed.
+  * reused Python workers: a task's ``importlib.invalidate_caches()``
+    re-reads no unchanged zip archive (CPython 3.11), and a zip added
+    by ``addPyFile`` afterwards still imports.
 """
 import os
 import sys
+import tempfile
+import zipfile
 from pathlib import Path
 
 sys.path.insert(0, "/root/repo")
@@ -170,6 +175,40 @@ def main() -> int:
     assert got == (90, 90, 90, 90, 9, 9), got
     assert len(sc._jsc.getPersistentRDDs()) == persisted, "RDD left pinned"
     print("PROBE sort mode exact keys: counters exact, key_total 9, nothing pinned")
+
+    # every worker of this application ran a MapReduce task above, so
+    # a one-task job lands on a reused, patched worker
+    def archive_rereads(_):
+        import importlib
+        import zipimport
+
+        reads = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or read_directory(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        yield reads
+
+    if sys.version_info[:2] == (3, 11):
+        reads = sc.parallelize([0], 1).mapPartitions(archive_rereads).collect()
+        assert reads == [[]], f"unchanged archives re-read: {reads}"
+        print("PROBE reused worker: invalidate_caches re-read no archive")
+
+    def late_value(_):
+        import probe_late_mod
+
+        yield probe_late_mod.VALUE
+
+    with tempfile.TemporaryDirectory() as tmp:
+        late_zip = os.path.join(tmp, "probe_late_mod.zip")
+        with zipfile.ZipFile(late_zip, "w") as zf:
+            zf.writestr("probe_late_mod.py", "VALUE = 42\n")
+        sc.addPyFile(late_zip)
+        late = sc.parallelize([0], 1).mapPartitions(late_value).collect()
+    assert late == [42], late
+    print("PROBE addPyFile zip imports in a later task")
     print("PROBES ALL GREEN")
     return 0
 
