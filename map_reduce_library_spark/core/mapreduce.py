@@ -38,6 +38,14 @@ one sketch job over the map (a count and a key sample per partition),
 weighted as Spark's RangePartitioner weights them, so skewed inputs
 still balance.
 
+``map_reduce_df``'s reduce sends back one output Arrow batch per input
+batch, not one per group, and holds at most one input batch, the
+largest group and that batch's outputs. Its width is AQE's: an
+intermediate under about 1 MB per slot is reduced by fewer tasks than
+slots. Pinning one partition per slot was measured and left out: every
+Arrow task costs 0.06-0.07 s whatever its rows (4-vCPU host), so on
+small intermediates the extra tasks cost more than they share out.
+
 Every stage of a generic job starts one Python worker per task: no
 stage reads a persisted PythonRDD back through a second worker, and no
 job runs that the contract does not need (sort mode's sketch; the
@@ -451,9 +459,12 @@ def map_reduce_df(
     it contiguous, and ONE ``mapInPandas`` generator per partition
     walks the Arrow batches, carrying the group open at a batch's end
     into the next — the JVM hands Python whole batches, not one group
-    at a time, and memory is bounded by a batch plus the largest group
-    (the holistic contract the reference has too: all values for a key
-    in RAM, MapReduceClient.h:83). Groups follow Spark's groupBy
+    at a time. The outputs of the groups that complete within one
+    input batch go back as ONE frame (one Arrow batch), the last open
+    group's output as one more. Memory is bounded by one input batch,
+    plus the largest group, plus that batch's outputs (the holistic
+    contract the reference has too: all values for a key in RAM,
+    MapReduceClient.h:83). Groups follow Spark's groupBy
     equality: NULL is its own group, NaN equals NaN and -0.0 equals
     0.0. Pandas reads a NULL float as NaN, so a null flag per key
     column, computed in the JVM, rides through the sort and tells the
@@ -503,6 +514,17 @@ def map_reduce_df(
             group = frags[0] if len(frags) == 1 else pd.concat(frags)
             return reduce_group(group.reset_index(drop=True))
 
+        def one_frame(outs):
+            """Yield the non-empty ``outs`` as one frame: PySpark turns
+            each yielded frame into its own Arrow batch. Zero-row
+            outputs, ``pd.DataFrame()`` among them, are left out so
+            they cast no column's dtype."""
+            outs = [o for o in outs if len(o)]
+            if outs:
+                yield outs[0] if len(outs) == 1 else pd.concat(
+                    outs, ignore_index=True
+                )
+
         # The open group is a LIST of fragments, concatenated once when
         # it completes, so a G-row group spanning many batches costs
         # O(G) copies, not O(G^2 / batch).
@@ -520,13 +542,15 @@ def map_reduce_df(
             edges = list(np.flatnonzero(starts)) + [len(pdf)]
             if edges[0] > 0:  # leading rows continue the open group
                 frags.append(data.iloc[: edges[0]])
+            done = []  # outputs of the groups this batch completes
             for lo, hi in zip(edges, edges[1:]):
                 if frags:
-                    yield reduce_frags(frags)
+                    done.append(reduce_frags(frags))
                 frags = [data.iloc[lo:hi]]
             tail = kf.iloc[-1:]
+            yield from one_frame(done)
         if frags:
-            yield reduce_frags(frags)
+            yield from one_frame([reduce_frags(frags)])
 
     return (
         intermediate.withColumns(

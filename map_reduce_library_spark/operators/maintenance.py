@@ -330,8 +330,11 @@ def compact_index(
         return n_files
     old_paths = [p for p, _len in small]
     df = spark.read.parquet(*[p.toString() for p in old_paths])
-    n_out = max(
-        1, _math.ceil(sum(ln for _p, ln in small) / target_file_bytes)
+    # never more files out than in: a tiny target would otherwise plan
+    # one partition per input byte
+    n_out = min(
+        len(old_paths),
+        max(1, _math.ceil(sum(ln for _p, ln in small) / target_file_bytes)),
     )
     df.dropDuplicates().repartition(n_out).write.mode(
         "overwrite"

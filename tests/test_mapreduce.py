@@ -1153,6 +1153,56 @@ def test_sorted_stream_reduce_separates_null_and_nan_keys(spark):
         spark.conf.set(conf, old)
 
 
+def test_sorted_stream_reduce_batches_outputs_like_apply_in_pandas(spark):
+    """Outputs are sent back one frame per input batch: groups that
+    emit zero rows (typed or ``pd.DataFrame()``), several rows, or
+    their columns in another order must come out exactly as a
+    per-group applyInPandas reference, at any Arrow batch size."""
+    df = spark.createDataFrame(
+        [(k, float(k * 10 + j)) for k in range(320) for j in range(1 + k % 5)],
+        "k long, v double",
+    ).repartition(5)
+    schema = "k long, n long, s double"
+
+    def reduce_group(pdf):
+        k = int(pdf["k"].iloc[0])
+        if k % 4 == 0:
+            return pd.DataFrame(
+                {"k": pd.Series([], dtype="int64"),
+                 "n": pd.Series([], dtype="int64"),
+                 "s": pd.Series([], dtype="float64")}
+            )
+        if k % 4 == 1:
+            return pd.DataFrame()
+        if k % 4 == 2:  # one row per value, columns reordered
+            return pd.DataFrame(
+                {"s": pdf["v"].to_numpy(), "n": range(len(pdf)), "k": k}
+            )
+        return pd.DataFrame({"k": [k], "n": [len(pdf)], "s": [pdf["v"].sum()]})
+
+    reference = sorted(
+        tuple(r)
+        for r in df.groupBy("k").applyInPandas(reduce_group, schema).collect()
+    )
+    assert len(reference) > 160
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf, "10000")
+    try:
+        for batch_rows in (old, "1", "7"):
+            spark.conf.set(conf, batch_rows)
+            got = sorted(
+                tuple(r)
+                for r in map_reduce_df(
+                    df, None, reduce_group,
+                    intermediate_schema="k long, v double",
+                    output_schema=schema, key_cols="k",
+                ).collect()
+            )
+            assert got == reference, batch_rows
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_sorted_stream_reduce_hides_null_flags_and_allows_empty_output(spark):
     """With two key columns, reduce_group sees exactly the intermediate
     columns (the JVM null flags are dropped first), a NULL in either

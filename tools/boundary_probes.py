@@ -23,6 +23,9 @@ Contract points exercised (SURVEY.md §2A/§2B):
   * sort mode with exact_reduce_keys on a key type that has only
     ``<``: counters and key_total exact, and no RDD left persisted
     once the handle is closed.
+  * map_reduce_df over 64 keys with 5-row Arrow batches, so groups
+    span batches and a batch completes several groups: every median
+    exact.
   * reused Python workers: a task's ``importlib.invalidate_caches()``
     re-reads no unchanged zip archive (CPython 3.11), and a zip added
     by ``addPyFile`` afterwards still imports.
@@ -175,6 +178,34 @@ def main() -> int:
     assert got == (90, 90, 90, 90, 9, 9), got
     assert len(sc._jsc.getPersistentRDDs()) == persisted, "RDD left pinned"
     print("PROBE sort mode exact keys: counters exact, key_total 9, nothing pinned")
+
+    import pandas as pd
+
+    from map_reduce_library_spark.core import map_reduce_df
+
+    # key k holds 2 * (k % 3) + 1 values, so its median is k * 100 + k % 3;
+    # 5-row Arrow batches split groups across batches
+    vals = spark.createDataFrame(
+        [(k, float(k * 100 + j)) for k in range(64) for j in range(2 * (k % 3) + 1)],
+        "k long, v double",
+    )
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch_rows = spark.conf.get(batch_conf, "10000")
+    spark.conf.set(batch_conf, "5")
+    try:
+        medians = map_reduce_df(
+            vals, None,
+            lambda pdf: pd.DataFrame(
+                {"k": [pdf["k"].iloc[0]], "med": [pdf["v"].median()]}
+            ),
+            intermediate_schema="k long, v double",
+            output_schema="k long, med double", key_cols="k",
+        ).collect()
+    finally:
+        spark.conf.set(batch_conf, batch_rows)
+    got = sorted(tuple(r) for r in medians)
+    assert got == [(k, float(k * 100 + k % 3)) for k in range(64)], got
+    print("PROBE map_reduce_df: 64 medians exact over 5-row Arrow batches")
 
     # every worker of this application ran a MapReduce task above, so
     # a one-task job lands on a reused, patched worker
