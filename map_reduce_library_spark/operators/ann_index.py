@@ -241,8 +241,15 @@ def _acquire_lease(
     ttl_ms = LEASE_TTL_MS if ttl_ms is None else ttl_ms
     fs, jvm = _fs(spark, path)
     lease = _jp(jvm, _lease_path(path))
-    if fs.exists(lease):
-        st = fs.getFileStatus(lease)
+    try:
+        st = fs.getFileStatus(lease) if fs.exists(lease) else None
+    except Exception:  # noqa: BLE001
+        # the holder released the lease between exists and
+        # getFileStatus: claim it below like an absent one
+        if fs.exists(lease):
+            raise
+        st = None
+    if st is not None:
         age_ms = int(time.time() * 1000) - st.getModificationTime()
         if age_ms < ttl_ms:
             raise IndexWriterConflict(

@@ -14,7 +14,15 @@ compares apples to apples.
 
 from __future__ import annotations
 
+import ast
+import functools
+import hashlib
+import inspect
+import json
+import re
+import sys
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,12 +43,9 @@ def register(name: str, oracle: str | None = None):
 
 
 # Registration modules (import side-effects populate the registry).
-# Import order is NOT the driver check order — the sorted() rebuild at
-# the bottom of this file fully determines it (staleness tiers, then
-# name), so new querydef modules can be appended anywhere here
-# (code-review r8: an older comment claimed position mattered).
-# Cross-module ORACLE references do constrain a few imports: dedup
-# composes text's oracle SQL, so text must import first.
+# Import order does not set the check order; _check_order at the bottom
+# of this file does. dedup composes text's oracle SQL, so text imports
+# first.
 from map_reduce_library_spark.querydefs import mapreduce_parity  # noqa: E402,F401
 from map_reduce_library_spark.querydefs import text  # noqa: E402,F401
 from map_reduce_library_spark.querydefs import dedup  # noqa: E402,F401  (needs text's oracle)
@@ -78,124 +83,93 @@ from map_reduce_library_spark.querydefs import manifests  # noqa: E402,F401
 from map_reduce_library_spark.querydefs import maintenanceq  # noqa: E402,F401
 from map_reduce_library_spark.querydefs import embingest  # noqa: E402,F401
 
-# Registry order = driver check order.  Rebuild the dicts so queries
-# with no trustworthy green come first (hash-oracled before rows-only),
-# and already-verified ones re-check last, oldest green first.
-#
-# _VERIFIED is DERIVED from VERIFIED_LEDGER.json (built by
-# tools/update_ledger.py from the committed CORRECTNESS_r*.json
-# artifacts), and it is STALENESS-AWARE: each ledger entry carries md5
-# hashes of the oracle SQL and the querydef source as they were when
-# the driver verified them, so editing either demotes the query back to
-# unverified-first (VERDICT.md round 3, "What's wrong" §3 — five r1/r2
-# greens survived an oracle+implementation rewrite undetected).
-# Rows-only sketches (no registered oracle, driver records rows only)
-# count verified once a rows row exists — they can never go hash-green
-# and must not permanently occupy cap slots (ADVICE round 3).
+# Check order. The driver re-checks only the first entries of QUERIES,
+# so the registry is ordered by risk. VERIFIED_LEDGER.json (written by
+# tools/update_ledger.py from CORRECTNESS_r*.json rows) holds, per
+# query, the round and source ("driver" or "local") of its last green
+# and md5 digests of what that green covered: the oracle SQL
+# (oracle_md5), the registered function's source (fn_md5) and every
+# package file the query reaches (deps_md5_map). Each query gets one
+# tier:
+#   0  no green row in any CORRECTNESS_r*.json beside the ledger
+#   1  no ledger entry (a red evicted it), or its oracle or source changed
+#   2  a file in its deps_md5_map changed, or the map cannot be computed
+#   3  fresh, last green from a local differential
+#   4  fresh, last green from the driver
+# and the order is (tier, rows-only, ledger round, name): oracled
+# queries before rows-only ones, oldest green first.
+
+_LEDGER = Path(__file__).resolve().parents[1] / "VERIFIED_LEDGER.json"
+_PKG = Path(__file__).resolve().parent
+# Package files a source text depends on: querydef, operator, streaming,
+# core and source modules, and the top-level tables/session modules.
+_DEP_RE = re.compile(
+    r"map_reduce_library_spark\.(operators|streaming|core|sources"
+    r"|querydefs)\.(\w+)"
+)
+_TOP_RE = re.compile(r"map_reduce_library_spark\.(tables|session)\b")
+_WORDS = re.compile(r"\w+")
 
 
-_DEPS_MD5_CACHE: dict[str, str | None] = {}
+def _md5(text: str | None) -> str | None:
+    return None if text is None else hashlib.md5(text.encode()).hexdigest()
 
 
-def deps_md5(fn) -> str | None:
-    """md5 over the BEHAVIOR modules (operators/streaming/core/sources
-    files, transitive closure by source scan) that ``fn``'s defining
-    querydef module references. Closes the staleness-ledger gap ADVICE
-    r4 flagged: ``fn_md5`` covers only the registered function's own
-    source, so rewriting an operator the querydef calls used to keep
-    stale greens silently (ivf_assign_cells was rewritten in r4 yet
-    ivf_ann_topk kept its r2 green) — folding the operator-module
-    content into the ledger hash auto-demotes dependents the same way
-    oracle/querydef edits already do."""
-    import hashlib
-    import re
-    import sys
-    from pathlib import Path
-
-    mod_name = getattr(fn, "__module__", None)
-    if mod_name in _DEPS_MD5_CACHE:
-        return _DEPS_MD5_CACHE[mod_name]
-    mod = sys.modules.get(mod_name)
-    src = getattr(mod, "__file__", None)
-    if src is None:
-        _DEPS_MD5_CACHE[mod_name] = None
+@functools.cache
+def _source(fn) -> str | None:
+    """The registered function's source text; None if unavailable."""
+    try:
+        return inspect.getsource(fn)
+    except (OSError, TypeError):
         return None
-    pkg_root = Path(__file__).resolve().parent
-    dep_re = re.compile(
-        r"map_reduce_library_spark\.(operators|streaming|core|sources"
-        r"|querydefs)\.(\w+)"
-    )
-    # Top-level package modules querydefs import directly (code-review
-    # r8: `from map_reduce_library_spark.tables import load_table` and
-    # friends were outside the regex closure, so a behavior edit to
-    # tables.normalize_event_ts kept every event query's stale green).
-    top_re = re.compile(r"map_reduce_library_spark\.(tables|session)\b")
-    visited: set[Path] = set()
-    dep_files: set[Path] = set()
-    stack = [Path(src)]
-    while stack:
-        p = stack.pop()
-        if p in visited:
-            continue
-        visited.add(p)
-        try:
-            text = p.read_text()
-        except OSError:
-            continue
-        for m in dep_re.finditer(text):
-            dp = pkg_root / m.group(1) / (m.group(2) + ".py")
-            if dp.exists() and dp not in visited:
-                dep_files.add(dp)
-                stack.append(dp)
-        for m in top_re.finditer(text):
-            dp = pkg_root / (m.group(1) + ".py")
-            if dp.exists() and dp not in visited:
-                dep_files.add(dp)
-                stack.append(dp)
-    h = hashlib.md5()
-    for dp in sorted(dep_files):
-        h.update(dp.name.encode())
-        try:
-            h.update(dp.read_bytes())
-        except OSError:
-            pass
-    digest = h.hexdigest()
-    _DEPS_MD5_CACHE[mod_name] = digest
-    return digest
 
 
-_DEPS_MAP_MODULE_CACHE: dict[str, tuple] = {}
-_DEPS_MAP_CACHE: dict[tuple[str, str], dict | None] = {}
-# process-lifetime caches: file content digests and per-file package
-# reference sets, shared across the 200+ per-query map computations
-_FILE_MD5_CACHE: dict = {}
-_FILE_REFS_CACHE: dict = {}
+@functools.cache
+def _file_md5(path: Path) -> str | None:
+    try:
+        return hashlib.md5(path.read_bytes()).hexdigest()
+    except OSError:
+        return None
 
 
+def _refs_of(text: str) -> set[Path]:
+    found: set[Path] = set()
+    for m in _DEP_RE.finditer(text):
+        dp = (_PKG / m.group(1) / (m.group(2) + ".py")).resolve()
+        if dp.exists():
+            found.add(dp)
+    for m in _TOP_RE.finditer(text):
+        dp = (_PKG / (m.group(1) + ".py")).resolve()
+        if dp.exists():
+            found.add(dp)
+    return found
+
+
+@functools.cache
+def _file_refs(path: Path) -> set[Path]:
+    try:
+        return _refs_of(path.read_text())
+    except OSError:
+        return set()
+
+
+@functools.cache
 def _module_slices(mod_name: str):
-    """Parse a querydef module once into (top_defs, header_stmts):
-    ``top_defs`` maps each top-level function/class name to its source
-    segment; ``header_stmts`` is a list of (bound_names, segment) for
-    top-level imports and assignments. Cached per module."""
-    import ast
-    import sys
-
-    if mod_name in _DEPS_MAP_MODULE_CACHE:
-        return _DEPS_MAP_MODULE_CACHE[mod_name]
+    """Parse a querydef module once into (src_path, top_defs,
+    header_stmts): ``top_defs`` maps each top-level function/class name
+    to (segment, word set); ``header_stmts`` is a list of (bound_names,
+    segment, word set) for top-level imports, assignments and any other
+    statement (bound_names None: always included). All three are None
+    when the module's source cannot be read or parsed."""
     mod = sys.modules.get(mod_name)
     src_path = getattr(mod, "__file__", None)
     if src_path is None:
-        _DEPS_MAP_MODULE_CACHE[mod_name] = (None, None, None)
-        return _DEPS_MAP_MODULE_CACHE[mod_name]
+        return None, None, None
     try:
-        text = open(src_path).read()
+        text = Path(src_path).read_text()
         tree = ast.parse(text)
     except (OSError, SyntaxError):
-        _DEPS_MAP_MODULE_CACHE[mod_name] = (None, None, None)
-        return _DEPS_MAP_MODULE_CACHE[mod_name]
-    import re
-
-    words = re.compile(r"\w+")
+        return None, None, None
     lines = text.splitlines(keepends=True)
 
     def segment(node) -> str:
@@ -209,12 +183,9 @@ def _module_slices(mod_name: str):
         col = node.col_offset
         decorators = getattr(node, "decorator_list", None)
         if decorators:
-            # node.lineno for a decorated def/class is the def line —
-            # decorators live ABOVE it. Excluding them would let a
-            # behavior-bearing decorator on a helper change without
-            # perturbing the <local> digest, surviving a stale green
-            # (ADVICE r13). Start at the first decorator's line, col 0
-            # (the '@' sits one column left of d.col_offset).
+            # a decorated def's lineno is the def line; start at the
+            # first decorator so a decorator edit moves the <local>
+            # digest of every query that reaches the def
             s = min(d.lineno for d in decorators) - 1
             col = 0
         seg_lines = list(lines[s:e])
@@ -224,14 +195,13 @@ def _module_slices(mod_name: str):
         seg_lines[0] = seg_lines[0][col:]
         return "".join(seg_lines)
 
-    # each entry: (trigger_names, segment, segment_word_set) — word
-    # sets make the reachability fixpoint linear instead of rescanning
-    # a growing text blob with per-name regexes
+    # word sets make the reachability fixpoint linear instead of
+    # rescanning a growing text blob with per-name regexes
     top_defs: dict[str, tuple[str, frozenset]] = {}
-    header_stmts: list[tuple[frozenset, str, frozenset]] = []
+    header_stmts: list[tuple[frozenset | None, str, frozenset]] = []
     for node in tree.body:
         seg = segment(node)
-        seg_words = frozenset(words.findall(seg))
+        seg_words = frozenset(_WORDS.findall(seg))
         if isinstance(
             node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
         ):
@@ -258,69 +228,43 @@ def _module_slices(mod_name: str):
             isinstance(node, ast.Expr)
             and isinstance(node.value, ast.Constant)
         ):
-            # any OTHER top-level statement (a try/if-guarded import,
-            # a loop building a registry, a side-effecting call) has
-            # no bound-name gate to reason about — mark it
-            # ALWAYS-INCLUDED (names=None) in every query's slice
-            # rather than let a conditional import escape the
-            # staleness hash. None exist in the corpus today; this is
-            # the forward guard. Docstrings/bare constants (Expr of
-            # Constant) stay excluded.
+            # any other top-level statement (a try/if-guarded import, a
+            # loop building a registry, a side-effecting call) has no
+            # bound-name gate, so it is in every query's slice;
+            # docstrings and bare constants stay out
             header_stmts.append((None, seg, seg_words))
-    _DEPS_MAP_MODULE_CACHE[mod_name] = (src_path, top_defs, header_stmts)
-    return _DEPS_MAP_MODULE_CACHE[mod_name]
+    return src_path, top_defs, header_stmts
 
 
+@functools.cache
 def deps_md5_map(fn) -> dict[str, str] | None:
-    """Per-QUERY dependency digests: {relpath: md5} over exactly the
-    package files ``fn``'s own slice of its querydef module reaches,
+    """Per-query dependency digests: {package-relative path: md5} over
+    the package files ``fn``'s slice of its querydef module reaches,
     plus a ``"<local>"`` digest of the same-module helpers it uses.
 
-    Replaces the per-MODULE ``deps_md5`` granularity for staleness
-    checks (VERDICT r12 item 1: a function-local
-    ``from querydefs.similarity import ...`` inside ONE dedup query
-    pulled operators/ann_index.py into the shared module closure, so
-    any ann_index edit demoted all 26 dedup queries — 160 ledger
-    demotions from one end-of-round commit). The slice is: the
-    registered function's source, plus (fixpoint) any top-level
-    same-module helper/class whose name it references, plus any
-    top-level import/assignment whose bound name it references. The
-    package files referenced from that slice expand transitively by
-    whole-file scan (operator-module internals stay coarse on
-    purpose: an operator edit must demote the queries that genuinely
-    call it). Falls back to None (callers then use ``deps_md5``) when
-    the function's source is unavailable."""
-    import hashlib
-    import inspect
-    import re
-    from pathlib import Path
+    The slice is the registered function's source, plus (to a fixpoint)
+    every top-level def or class of the same module whose name it
+    references and every top-level import or assignment whose bound
+    name it references. Files referenced from the slice expand
+    transitively by whole-file scan, so an operator edit demotes
+    exactly the queries that reach that operator. None when the
+    function's source or its module's source is unavailable.
 
-    mod_name = getattr(fn, "__module__", None)
-    qualname = getattr(fn, "__qualname__", repr(fn))
-    key = (mod_name or "", qualname)
-    if key in _DEPS_MAP_CACHE:
-        return _DEPS_MAP_CACHE[key]
-    src_path, top_defs, header_stmts = _module_slices(mod_name)
-    try:
-        fn_src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        fn_src = None
+    Names match as literal words, which over-includes (a name inside an
+    oracle SQL string counts), the safe direction for a staleness
+    digest; a helper reached only through a computed name
+    (``globals()[...]``, ``getattr`` with a computed string) would be
+    missed, so querydef modules must not use them
+    (tests/test_registry_order.py::
+    test_querydefs_have_no_dynamic_same_module_references)."""
+    src_path, top_defs, header_stmts = _module_slices(
+        getattr(fn, "__module__", None)
+    )
+    fn_src = _source(fn)
     if src_path is None or fn_src is None:
-        _DEPS_MAP_CACHE[key] = None
         return None
 
-    # Fixpoint: pull in same-module helpers and header statements the
-    # accumulated slice references by name. Word-set membership over
-    # source text over-includes (a name inside an oracle SQL string
-    # still counts) — the safe direction for a staleness hash.
-    # CONSTRAINT (ADVICE r13): the name match is literal, so a helper
-    # reached only through a dynamically constructed name
-    # (globals()[f"impl_{mode}"], getattr with a computed string)
-    # would be under-included and its edits would not demote the
-    # query. Querydef modules must not use such references —
-    # enforced by tests/test_registry_order.py::
-    # test_querydefs_have_no_dynamic_same_module_references.
-    seen_words: set[str] = set(re.findall(r"\w+", fn_src))
+    seen_words: set[str] = set(_WORDS.findall(fn_src))
     included_defs: dict[str, str] = {}
     included_headers: list[str] = []
     header_used = [False] * len(header_stmts)
@@ -348,60 +292,24 @@ def deps_md5_map(fn) -> dict[str, str] | None:
                 seen_words |= seg_words
                 changed = True
 
-    pkg_root = Path(__file__).resolve().parent
-    dep_re = re.compile(
-        r"map_reduce_library_spark\.(operators|streaming|core|sources"
-        r"|querydefs)\.(\w+)"
-    )
-    top_re = re.compile(r"map_reduce_library_spark\.(tables|session)\b")
     own = Path(src_path).resolve()
-
-    def refs_of(text: str) -> set[Path]:
-        found: set[Path] = set()
-        for m in dep_re.finditer(text):
-            dp = (pkg_root / m.group(1) / (m.group(2) + ".py")).resolve()
-            if dp.exists():
-                found.add(dp)
-        for m in top_re.finditer(text):
-            dp = (pkg_root / (m.group(1) + ".py")).resolve()
-            if dp.exists():
-                found.add(dp)
-        return found
-
-    # Seed scan over the query's slice only; transitive expansion over
-    # whole files (same walk deps_md5 uses), with per-file ref sets
-    # cached across the 200+ queries sharing operator hubs.
     visited: set[Path] = {own}
     dep_files: set[Path] = set()
-    stack: list[Path] = [p for p in refs_of("\n".join(parts)) if p != own]
+    stack: list[Path] = [p for p in _refs_of("\n".join(parts)) if p != own]
     dep_files.update(stack)
     while stack:
         p = stack.pop()
-        if p not in _FILE_REFS_CACHE:
-            try:
-                _FILE_REFS_CACHE[p] = refs_of(p.read_text())
-            except OSError:
-                _FILE_REFS_CACHE[p] = set()
         visited.add(p)
-        for dp in _FILE_REFS_CACHE[p]:
+        for dp in _file_refs(p):
             if dp != own and dp not in visited and dp not in dep_files:
                 dep_files.add(dp)
                 stack.append(dp)
 
     out: dict[str, str] = {}
-    repo_pkg = pkg_root.resolve()
     for dp in sorted(dep_files):
-        if dp not in _FILE_MD5_CACHE:
-            try:
-                _FILE_MD5_CACHE[dp] = hashlib.md5(
-                    dp.read_bytes()
-                ).hexdigest()
-            except OSError:
-                _FILE_MD5_CACHE[dp] = None
-        digest = _FILE_MD5_CACHE[dp]
-        if digest is None:
-            continue
-        out[str(dp.relative_to(repo_pkg))] = digest
+        digest = _file_md5(dp)
+        if digest is not None:
+            out[str(dp.relative_to(_PKG))] = digest
     lh = hashlib.md5()
     for dname in sorted(included_defs):
         lh.update(dname.encode())
@@ -409,97 +317,16 @@ def deps_md5_map(fn) -> dict[str, str] | None:
     for seg in sorted(included_headers):
         lh.update(seg.encode())
     out["<local>"] = lh.hexdigest()
-    _DEPS_MAP_CACHE[key] = out
     return out
 
 
-def _load_verified() -> dict[str, int]:
-    """name -> round of last trustworthy green (hash-validated)."""
-    import hashlib
-    import inspect
-    import json
-    from pathlib import Path
-
-    path = Path(__file__).resolve().parents[1] / "VERIFIED_LEDGER.json"
-    try:
-        ledger = json.loads(path.read_text())
-    except (OSError, ValueError):
-        return {}
-
-    def md5(text: str | None) -> str | None:
-        return None if text is None else hashlib.md5(text.encode()).hexdigest()
-
-    out: dict[str, int] = {}
-    for name, entry in ledger.items():
-        if name not in QUERIES or not isinstance(entry, dict):
-            continue
-        _IN_LEDGER.add(name)
-        if entry.get("oracle_md5") != md5(ORACLES.get(name)):
-            _STALE_SELF.add(name)
-            continue  # oracle changed since green -> stale
-        try:
-            fn_md5 = md5(inspect.getsource(QUERIES[name]))
-        except (OSError, TypeError):
-            fn_md5 = None
-        if entry.get("fn_md5") != fn_md5:
-            _STALE_SELF.add(name)
-            continue  # querydef changed since green -> stale
-        # Dep staleness, finest evidence wins: entries stamped with the
-        # per-QUERY deps_md5_map are held to it (and only it — the
-        # coarse per-module deps_md5 would re-demote them on sibling
-        # edits, defeating VERDICT r12 item 1); entries with only the
-        # legacy per-module digest keep the old check; entries with
-        # neither (pre-r4) are held to oracle/fn hashes alone.
-        if isinstance(entry.get("deps_md5_map"), dict):
-            if entry["deps_md5_map"] != deps_md5_map(QUERIES[name]):
-                continue  # a file this query actually reaches changed
-        elif "deps_md5" in entry and entry["deps_md5"] != deps_md5(
-            QUERIES[name]
-        ):
-            continue  # an operator the querydef calls changed -> stale
-        out[name] = int(entry.get("round", 0))
-        _LEDGER_SOURCE[name] = entry.get("source", "driver")
-    return out
-
-
-# Stale entries whose OWN oracle or querydef source changed (vs
-# deps-only demotions, where an operator module the querydef merely
-# references was edited). When demotions outnumber the driver's
-# 50-slot cap, the self-changed ones carry the most re-verification
-# risk and must be sampled first.
-_STALE_SELF: set[str] = set()
-# Every query with ANY ledger entry (fresh or stale). An ever-green
-# query ABSENT here was red-regressed (update_ledger deletes reds) —
-# after a fix it must re-check in the highest-risk tier, not compete
-# alphabetically at the bottom of the deps-only pool (code-review r8).
-_IN_LEDGER: set[str] = set()
-# name -> "driver" | "local": where the last trustworthy green came
-# from. "local" means tools/update_ledger.py --local folded a local
-# drive_entry.py differential (same hash procedure, this machine);
-# the driver itself has not re-hashed that exact source yet.
-_LEDGER_SOURCE: dict[str, str] = {}
-_VERIFIED = _load_verified()
-
-
-def _load_ever_green() -> set[str]:
-    """Names with at least one GREEN row in any committed
-    CORRECTNESS_r*.json (hash-green, or rows-only green for the
-    oracle-less sketches — the same criteria tools/update_ledger.py
-    uses). Unverified queries WITHOUT any green ever — brand-new ones
-    the driver has never sampled AND ones whose every sampled row was
-    an err/mismatch — rank ahead of staleness-demoted re-checks:
-    round 5 ended with 7 finished-but-never-sampled queries because
-    the 50-slot sample was consumed alphabetically (VERDICT r5 item
-    6), and the red `source_lang_mix` kept losing its slot the same
-    way. A first-ever correctness signal must never be crowded out by
-    a repeat one."""
-    import json
-    from pathlib import Path
-
+def _ever_green(folder: Path) -> set[str]:
+    """Names with a green row in any CORRECTNESS_r*.json in ``folder``:
+    rows, schema and hash match with no error, or a rows-only row for a
+    query without an oracle (the rows tools/update_ledger.py folds as
+    green)."""
     green: set[str] = set()
-    for p in Path(__file__).resolve().parents[1].glob(
-        "CORRECTNESS_r*.json"
-    ):
+    for p in folder.glob("CORRECTNESS_r*.json"):
         try:
             data = json.loads(p.read_text())
         except (OSError, ValueError):
@@ -524,89 +351,46 @@ def _load_ever_green() -> set[str]:
     return green
 
 
-_EVER_GREEN = _load_ever_green()
-
-# Regression canaries: re-check the reference-parity flagship (C3-C6
-# wordcount) and the first relational queries ahead of other verified
-# re-checks whenever cap slots remain.
-_CANARIES = ("wordcount", "filter_project", "pricing_summary")
-
-# Hand-curated driver-provenance refresh list (VERDICT r10 items 1-2):
-# names here sort immediately after the never-green tier, ahead of
-# every other re-check, so the next driver 50-sample re-hashes them
-# with driver provenance even when a local fold has already restored
-# their ledger validity. Round 13: CORRECTNESS_r12 drained all eight
-# round-12 entries driver-green; the list re-curates to this round's
-# risk set — exactly the 12 queries the round-13 edits demoted (the
-# per-query deps_md5_map kept the blast radius to genuine
-# dependents): the jpeg family (three decoder edge-case fixes: fill
-# bytes, ZRL bounds, per-restart-segment garbage), the generic-MR
-# parity family (PairCounters docstring + the sink= write variant in
-# the same dep closure), and the multimodal family (shares
-# operators/jpeg.py). All 12 re-differentialed local-green the same
-# day (r13_local1 fold). Curated per round — remove entries once
-# CORRECTNESS_r{N} records their driver green.
-_PRIORITY_REFRESH = (
-    "jpeg_image_stats",
-    "jpeg_thumbnail_stats",
-    "mr_combiner_wordcount",
-    "mr_generic_wordcount",
-    "mr_holistic_median",
-    "mr_multi_emit_extremes",
-    "mr_sortmode_wordcount",
-    "mr_zero_emit_filter",
-    "multimodal_features",
-    "multimodal_frames",
-    "multimodal_meta",
-    "multimodal_resize",
-)
+def _load_verified(
+    ledger_path: Path = _LEDGER,
+) -> dict[str, tuple[int, int]]:
+    """name -> (tier, ledger round) for every registered query, from
+    the ledger at ``ledger_path`` and the CORRECTNESS_r*.json files
+    beside it (tiers as described above; round 0 without an entry)."""
+    try:
+        ledger = json.loads(ledger_path.read_text())
+    except (OSError, ValueError):
+        ledger = {}
+    ever_green = _ever_green(ledger_path.parent)
+    out: dict[str, tuple[int, int]] = {}
+    for name, fn in QUERIES.items():
+        entry = ledger.get(name)
+        if not isinstance(entry, dict):
+            entry = {}
+        if name not in ever_green:
+            tier = 0
+        elif not entry or (entry.get("oracle_md5"), entry.get("fn_md5")) != (
+            _md5(ORACLES.get(name)), _md5(_source(fn))
+        ):
+            tier = 1
+        elif deps_md5_map(fn) is None or (
+            entry.get("deps_md5_map") != deps_md5_map(fn)
+        ):
+            tier = 2
+        else:
+            tier = 3 if entry.get("source") == "local" else 4
+        out[name] = (tier, int(entry.get("round", 0)))
+    return out
 
 
-def _order_key(name: str) -> tuple:
-    verified = name in _VERIFIED
-    # never-green first (tier 0 below), then the curated refresh list,
-    # then everything else in the existing tiered order
-    front = 0 if name not in _EVER_GREEN else (
-        1 if name in _PRIORITY_REFRESH else 2
-    )
-    canary = _CANARIES.index(name) if name in _CANARIES else len(_CANARIES)
-    # Verified queries re-check oldest-green-first so no family's last
-    # green ever drifts more than a couple of rounds stale.
-    age = _VERIFIED.get(name, 0)
-    # Among unverified: never-green first (no trustworthy correctness
-    # signal EVER — never sampled, or every sampled row was red), then
-    # re-checks whose OWN querydef/oracle changed (semantic edits —
-    # highest re-verification risk), then deps-only demotions (an
-    # operator module the querydef references was edited).
-    if name not in _EVER_GREEN:
-        tier = 0
-    elif name in _STALE_SELF or name not in _IN_LEDGER:
-        tier = 1  # own-source change, or a red-evicted green (cr r8)
-    else:
-        tier = 2
-    # Among verified: canaries first, then queries the DRIVER has
-    # never hash-greened (a local differential is the only evidence —
-    # a first-ever driver signal beats any repeat), then entries whose
-    # last trustworthy green is a local fold (driver hasn't re-hashed
-    # that source; round 6 proved local-only freshness reads as debt),
-    # then driver-fresh entries oldest-green-first.
-    if name not in _EVER_GREEN:
-        vtier = 0
-    elif _LEDGER_SOURCE.get(name) == "local":
-        vtier = 1
-    else:
-        vtier = 2
-    return (
-        front,
-        verified,
-        name not in ORACLES,
-        canary if verified else tier,
-        vtier if verified else 0,
-        age,
-        name,
+def _check_order(tiers: dict[str, tuple[int, int]]) -> list[str]:
+    return sorted(
+        tiers,
+        key=lambda n: (tiers[n][0], n not in ORACLES, tiers[n][1], n),
     )
 
 
-_order = sorted(QUERIES, key=_order_key)
+_TIERS = _load_verified()
+_order = _check_order(_TIERS)
 QUERIES = {n: QUERIES[n] for n in _order}
 ORACLES = {n: ORACLES[n] for n in _order if n in ORACLES}

@@ -111,3 +111,21 @@ def assert_oracle_match(spark, name: str, sf_dir: str = SF_CORRECTNESS):
         raise AssertionError(
             f"{name}: value multiset differs.\n spark-only: {diff_s}\n duck-only: {diff_d}"
         )
+
+
+def jobs_started_by(spark, fn) -> int:
+    """Run ``fn`` under a fresh job group; return how many Spark jobs
+    it started. The group is set on the calling thread, and PySpark's
+    pinned-thread mode gives that thread its own JVM thread, so jobs
+    that other threads start are not counted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1377,7 +1377,8 @@ def test_cross_process_lease_stress_exactly_one_writer(
     strictly alternate), (b) the two processes' op windows genuinely
     overlapped (the child blocks until the parent signals go, so the
     lease was the only arbiter), (c) losers raise IndexWriterConflict
-    and retry to success, (d) a concurrent reader never serves a
+    and retry to success (a side starves if it keeps losing once the
+    other side has finished its ops), (d) a concurrent reader never serves a
     fabricated id, (e) the final index equals the union membership
     model of both sides' disjoint id territories."""
     import os
@@ -1393,6 +1394,7 @@ def test_cross_process_lease_stress_exactly_one_writer(
     log = str(tmp_path / "lease_log")
     ready = tmp_path / "child_ready"
     go = tmp_path / "parent_go"
+    parent_done = tmp_path / "parent_done"
     base = emb.where(F.col("vec_id") < 150)
     write_ivf_pq_index(build_ivf_pq_index(base, DIM, n_centroids=16), path)
 
@@ -1450,12 +1452,18 @@ def test_cross_process_lease_stress_exactly_one_writer(
         path = {path!r}
         conflicts = 0
         def run_to_success(fn):
+            # only conflicts after the parent's ops are done count
+            # against the budget; before that the parent may hold the
+            # lease for as long as its ops take on a loaded host
             global conflicts
-            for _ in range(400):
+            tries = 0
+            while tries < 400:
                 try:
                     return fn()
                 except ai.IndexWriterConflict:
                     conflicts += 1
+                    if os.path.exists({str(parent_done)!r}):
+                        tries += 1
                     time.sleep(0.05)
             raise AssertionError("child op starved")
 
@@ -1483,6 +1491,8 @@ def test_cross_process_lease_stress_exactly_one_writer(
         [sys.executable, str(script)],
         stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
     )
+    stop_reader = threading.Event()
+    rt = None
     try:
         deadline = time.time() + 120
         while not ready.exists():
@@ -1491,18 +1501,27 @@ def test_cross_process_lease_stress_exactly_one_writer(
             time.sleep(0.1)
 
         conflicts = {"n": 0}
+        give_up = time.time() + 480
 
         def run_to_success(fn):
-            for _ in range(400):
+            # only conflicts after the child has exited count against
+            # the budget; while it runs, its back-to-back ops may hold
+            # the lease for as long as they take on a loaded host
+            tries = 0
+            while tries < 400:
                 try:
                     return fn()
                 except ai.IndexWriterConflict:
                     conflicts["n"] += 1
+                    if child.poll() is not None:
+                        tries += 1
+                    assert time.time() < give_up, (
+                        "parent op starved while the child ran"
+                    )
                     time.sleep(0.05)
             raise AssertionError("parent op starved")
 
         all_ids = {r.vec_id for r in emb.select("vec_id").collect()}
-        stop_reader = threading.Event()
         reader_ok = {"serves": 0}
 
         def reader():
@@ -1555,14 +1574,20 @@ def test_cross_process_lease_stress_exactly_one_writer(
                 fromlist=["compact_ivf_pq_index"],
             ).compact_ivf_pq_index(spark, path)
         )
+        parent_done.write_text("done")
         out, err = child.communicate(timeout=480)
         stop_reader.set()
         rt.join(timeout=30)
         assert child.returncode == 0, err[-3000:]
         assert "CHILD_OK" in out, out[-1000:]
     finally:
+        # a failed assertion above must not leave the reader thread
+        # running Spark jobs into later tests
+        stop_reader.set()
         if child.poll() is None:
             child.kill()
+        if rt is not None:
+            rt.join(timeout=60)
 
     # (a) merged log strictly alternates ENTER/EXIT across processes
     events = []

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from conftest import SF_CORRECTNESS, SF_SMOKE
+from conftest import SF_CORRECTNESS, SF_SMOKE, jobs_started_by
 
 from map_reduce_library_spark.operators.maintenance import (
     compact_parquet,
@@ -117,10 +117,11 @@ def test_snapshot_upsert_merge_query_oracle(spark):
 
 
 def test_snapshot_upsert_merge_is_single_lazy_plan(spark):
-    """ADVICE r6: validate=False keeps MERGE lazy — building the
-    merged DataFrame launches NO Spark job (local relations, so any
-    job observed comes from the operator itself), while the
-    validate=True probe eagerly runs one."""
+    """validate=False keeps MERGE lazy — building the merged DataFrame
+    launches NO Spark job (local relations, so any job observed comes
+    from the operator itself), while the validate=True probe eagerly
+    runs one. Each call runs under its own job group, so jobs of other
+    work in the application are not counted."""
     from map_reduce_library_spark.operators.maintenance import (
         snapshot_upsert,
     )
@@ -131,22 +132,19 @@ def test_snapshot_upsert_merge_is_single_lazy_plan(spark):
     delta = spark.createDataFrame(
         [(1, "new"), (99, "ins")], "k bigint, v string"
     )
-    tracker = spark.sparkContext.statusTracker()
-    # the status tracker learns of a job from the listener bus; drain
-    # it before each count so an earlier test's queued job start is
-    # not counted as launched by the call
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    bus.waitUntilEmpty()
-    before = len(tracker.getJobIdsForGroup(None))
-    merged = snapshot_upsert(base, delta, ["k"], validate=False)
-    bus.waitUntilEmpty()
-    assert len(tracker.getJobIdsForGroup(None)) == before, (
-        "validate=False still launched an eager job"
+    built = []
+    lazy_jobs = jobs_started_by(
+        spark,
+        lambda: built.append(
+            snapshot_upsert(base, delta, ["k"], validate=False)
+        ),
     )
-    snapshot_upsert(base, delta, ["k"])  # default probes eagerly
-    bus.waitUntilEmpty()
-    assert len(tracker.getJobIdsForGroup(None)) > before
-    assert merged.count() == 11
+    assert lazy_jobs == 0, "validate=False still launched an eager job"
+    # default probes eagerly
+    assert jobs_started_by(
+        spark, lambda: snapshot_upsert(base, delta, ["k"])
+    ) >= 1
+    assert built[0].count() == 11
 
 
 def test_validate_true_probe_raises_on_duplicate_delta_keys(spark):

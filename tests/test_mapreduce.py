@@ -9,6 +9,7 @@ import pytest
 
 REPO = Path(__file__).resolve().parents[1]
 
+from conftest import jobs_started_by
 from map_reduce_library_spark.core import (
     JobState,
     Stage,
@@ -1259,22 +1260,6 @@ def test_identity_map_checks_intermediate_schema(spark):
     assert [tuple(r) for r in out] == [("a", 1)]
 
 
-def _jobs_started_by(spark, fn) -> int:
-    """Run ``fn`` under a fresh job group; return how many Spark jobs
-    it started."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex[:12]}"
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_sort_mode_job_count(spark):
     """Sort mode runs one sketch job for its range bounds plus the
     shuffle job itself; with one output partition there is nothing to
@@ -1293,7 +1278,7 @@ def test_sort_mode_job_count(spark):
     for parts, jobs in ((4, 2), (1, 1)):
         c = PairCounters(spark, len(data))
         out: list = []
-        n = _jobs_started_by(
+        n = jobs_started_by(
             spark,
             lambda: out.extend(
                 run_map_reduce(

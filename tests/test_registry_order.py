@@ -1,9 +1,9 @@
 """Registry ordering: the driver checks queries in registration order
-with a cap, so unverified (red, never-checked, or STALE — oracle or
-querydef edited since last green) queries MUST precede already-green
-ones, and _VERIFIED must be derived from the committed
-VERIFIED_LEDGER.json (built by tools/update_ledger.py from the
-CORRECTNESS_r*.json artifacts) rather than hand-maintained."""
+with a cap, so the registry is sorted by the one tier rule in
+queries.py — never-green, own source changed, a dependency changed,
+fresh from a local run, fresh from the driver — derived from the
+committed VERIFIED_LEDGER.json (built by tools/update_ledger.py from
+the CORRECTNESS_r*.json artifacts) rather than hand-maintained."""
 
 from __future__ import annotations
 
@@ -16,24 +16,61 @@ from map_reduce_library_spark import queries as q
 
 REPO = Path(__file__).resolve().parents[1]
 
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True,
+         "spark_rows": 1, "oracle_rows": 1, "err": None}
+ROWS_ONLY = {"rows_match": None, "schema_match": None, "hash_match": None,
+             "spark_rows": 5, "oracle_rows": None, "err": "no_oracle"}
+
 
 def _md5(text: str) -> str:
     return hashlib.md5(text.encode()).hexdigest()
 
 
+def _fresh_entry(name: str, rnd: int, source: str) -> dict:
+    fn = q.QUERIES[name]
+    oracle = q.ORACLES.get(name)
+    return {
+        "round": rnd,
+        "source": source,
+        "oracle_md5": None if oracle is None else _md5(oracle),
+        "fn_md5": _md5(inspect.getsource(fn)),
+        "deps_md5_map": q.deps_md5_map(fn),
+    }
+
+
+def _write_ledger(folder: Path, ledger: dict, correctness=None) -> Path:
+    """Write ``ledger`` into ``folder`` beside the CORRECTNESS rows the
+    tiers read: ``correctness`` as CORRECTNESS_r01.json, or links to the
+    committed CORRECTNESS_r*.json files when it is None."""
+    if correctness is None:
+        for p in REPO.glob("CORRECTNESS_r*.json"):
+            (folder / p.name).symlink_to(p)
+    else:
+        (folder / "CORRECTNESS_r01.json").write_text(json.dumps(correctness))
+    path = folder / "VERIFIED_LEDGER.json"
+    path.write_text(json.dumps(ledger))
+    return path
+
+
 def test_verified_subset_of_ledger_and_hash_validated():
     ledger = json.loads((REPO / "VERIFIED_LEDGER.json").read_text())
-    for name, rnd in q._VERIFIED.items():
+    fresh = {n: r for n, (t, r) in q._TIERS.items() if t >= 3}
+    assert fresh
+    for name, rnd in fresh.items():
         entry = ledger[name]
         assert entry["round"] == rnd
         oracle = q.ORACLES.get(name)
         assert entry["oracle_md5"] == (None if oracle is None else _md5(oracle))
         assert entry["fn_md5"] == _md5(inspect.getsource(q.QUERIES[name]))
+        assert entry["deps_md5_map"] == q.deps_md5_map(q.QUERIES[name])
+        assert q._TIERS[name][0] == (
+            3 if entry.get("source") == "local" else 4
+        )
 
 
 def test_stale_entries_are_demoted():
     """A ledger entry whose recorded oracle hash no longer matches the
-    current oracle must NOT count verified (the round-3 blind spot)."""
+    current oracle must NOT count verified."""
     ledger = json.loads((REPO / "VERIFIED_LEDGER.json").read_text())
     for name, entry in ledger.items():
         if name not in q.QUERIES:
@@ -41,29 +78,26 @@ def test_stale_entries_are_demoted():
         oracle = q.ORACLES.get(name)
         current = None if oracle is None else _md5(oracle)
         if entry.get("oracle_md5") != current:
-            assert name not in q._VERIFIED, (
+            assert q._TIERS[name][0] <= 1, (
                 f"{name!r} counts verified despite a changed oracle"
             )
 
 
 def test_later_red_evicts_earlier_green(tmp_path, monkeypatch):
     """tools/update_ledger.py: a red row in round N+1 must remove the
-    ledger entry a green row in round N created (ADVICE round 3: the
-    old tests never constructed this scenario)."""
+    ledger entry a green row in round N created."""
     import tools.update_ledger as ul
 
     monkeypatch.setattr(ul, "REPO", tmp_path)
-    green = {"rows_match": True, "schema_match": True,
-             "hash_match": True, "spark_rows": 5, "err": None}
-    red = dict(green, hash_match=False)
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({"qx": green}))
+    red = dict(GREEN, hash_match=False)
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({"qx": GREEN}))
     (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"qx": red}))
 
     def fake_registry(_source):
         def qx():
             return None
 
-        return {"qx": qx}, {"qx": "SELECT 1"}, None, None
+        return {"qx": qx}, {"qx": "SELECT 1"}, None
 
     monkeypatch.setattr(ul, "_registry", fake_registry)
     ledger = ul.update(1, tmp_path)
@@ -74,19 +108,19 @@ def test_later_red_evicts_earlier_green(tmp_path, monkeypatch):
 
 def test_rows_only_green_counts_verified(tmp_path, monkeypatch):
     """err == 'no_oracle' with rows recorded is as green as that query
-    can ever get; it must enter the ledger (ADVICE round 3)."""
+    can ever get; it must enter the ledger."""
     import tools.update_ledger as ul
 
     monkeypatch.setattr(ul, "REPO", tmp_path)
-    row = {"rows_match": None, "schema_match": None, "hash_match": None,
-           "spark_rows": 5, "oracle_rows": None, "err": "no_oracle"}
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({"qs": row}))
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"qs": ROWS_ONLY})
+    )
 
     def fake_registry(_source):
         def qs():
             return None
 
-        return {"qs": qs}, {}, None, None
+        return {"qs": qs}, {}, None
 
     monkeypatch.setattr(ul, "_registry", fake_registry)
     ledger = ul.update(1, tmp_path)
@@ -98,156 +132,82 @@ def test_no_oracle_sketches_do_not_hog_cap_slots():
     they must sit in the verified block, not permanently first."""
     for name in ("approx_distinct_users", "approx_quantiles_price",
                  "hll_sketch_rollup_daily"):
-        assert name in q._VERIFIED
+        assert q._TIERS[name][0] >= 3
 
 
 def test_unverified_before_verified():
-    """Every unverified query precedes every verified one — EXCEPT
-    the hand-curated _PRIORITY_REFRESH names, which jump the queue by
-    design even when a local fold already restored their ledger
-    validity (the whole point of the tier: the next driver sample
-    must re-hash them with driver provenance). The strict invariant
-    therefore holds on the non-curated population; the curated names
-    need only beat every non-curated verified entry. (The old strict
-    form was latently wrong whenever a curated name was verified
-    while anything else was stale — it only ever passed in all-fresh
-    or all-stale ledger states; round 12.)"""
-    order = list(q.QUERIES)
-    idx = {name: i for i, name in enumerate(order)}
-    # never-green names front the whole order by design too (no
-    # driver signal EVER beats any re-check, even if a local fold
-    # already verified them) — the invariant below is about re-checks
-    curated = set(q._PRIORITY_REFRESH) | {
-        n for n in order if n not in q._EVER_GREEN
-    }
-    unverified = [
-        n for n in order if n not in q._VERIFIED and n not in curated
-    ]
-    verified = [n for n in order if n in q._VERIFIED and n not in curated]
-    if unverified and verified:
-        assert max(idx[n] for n in unverified) < min(idx[n] for n in verified), (
-            "every unverified query must precede every verified one"
-        )
-    never_green = [n for n in order if n not in q._EVER_GREEN]
-    for name in curated:
-        if name not in idx:
-            continue
-        # curated names beat every non-curated verified entry...
-        if verified:
-            assert idx[name] < min(idx[n] for n in verified), name
-    # ...but a PRIORITY name that has ever been green never beats the
-    # never-green tier (never-green fronts the whole order). Compare
-    # priority names specifically — never-green names were folded
-    # into `curated` above, so testing membership there would be
-    # vacuous (code-review r12).
-    priority_green = [
-        n for n in q._PRIORITY_REFRESH
-        if n in idx and n in q._EVER_GREEN
-    ]
-    for name in priority_green:
-        for n in never_green:
-            assert idx[n] < idx[name], (n, name)
+    """Tiers never decrease along the check order, so every unverified
+    query (tiers 0-2) precedes every verified one (tiers 3-4), and no
+    driver-fresh query takes a slot while a lower tier waits."""
+    tiers = [q._TIERS[n][0] for n in q.QUERIES]
+    assert tiers == sorted(tiers)
+    assert set(q._TIERS) == set(q.QUERIES)
 
 
 def test_oracled_before_rows_only_within_unverified():
-    order = [n for n in q.QUERIES if n not in q._VERIFIED]
-    seen_rows_only = False
-    for name in order:
-        if name not in q.ORACLES:
-            seen_rows_only = True
-        else:
-            assert not seen_rows_only, (
-                f"oracled unverified query {name!r} ordered after a "
-                "rows-only one"
-            )
-
-
-def test_canaries_lead_verified_recheck_block():
-    """Canaries lead the verified re-check block — after the two
-    front tiers that outrank every repeat signal: queries with no
-    driver green EVER (first-ever correctness beats any re-check) and
-    the hand-curated _PRIORITY_REFRESH drain list (round 11)."""
-    verified_order = [
-        n
-        for n in q.QUERIES
-        if n in q._VERIFIED
-        and n in q._EVER_GREEN
-        and n not in q._PRIORITY_REFRESH
-    ]
-    present = [c for c in q._CANARIES if c in q._VERIFIED]
-    assert verified_order[: len(present)] == present
-
-
-def test_priority_refresh_outranks_canaries_but_not_first_signals():
-    """The curated drain list sits between the never-green tier and
-    every other entry, so the next driver sample must re-hash it with
-    driver provenance (VERDICT r10 item 2)."""
-    order = list(q.QUERIES)
-    prio_idx = [order.index(n) for n in q._PRIORITY_REFRESH if n in order]
-    if not prio_idx:
-        return
-    never_green_idx = [
-        order.index(n) for n in order if n not in q._EVER_GREEN
-    ]
-    rest_idx = [
-        order.index(n)
-        for n in order
-        if n in q._EVER_GREEN and n not in q._PRIORITY_REFRESH
-    ]
-    assert max(never_green_idx, default=-1) < min(prio_idx)
-    assert max(prio_idx) < min(rest_idx)
+    """Within each tier (the unverified ones included), oracled queries
+    precede rows-only ones."""
+    for tier in range(5):
+        block = [n for n in q.QUERIES if q._TIERS[n][0] == tier]
+        oracled = [n in q.ORACLES for n in block]
+        assert oracled == sorted(oracled, reverse=True), tier
 
 
 def test_verified_recheck_oldest_green_first():
-    """Within the verified block (after canaries), re-checks run in
-    ascending last-green-round order so no family drifts stale.
-    Hash-oracled and rows-only entries are separate sub-blocks (the
-    order key ranks `name not in ORACLES` before age — rows-only
-    greens are weaker evidence and re-check after all oracled ones),
-    and each splits again by evidence source (vtier, round 7): entries
-    whose latest green is a LOCAL differential fold re-check before
-    driver-fresh entries regardless of round — the driver has never
-    hashed that source version, so a round-8 local green is WEAKER
-    evidence than a round-5 driver green. The ascending-rounds
-    invariant therefore holds per (oracle-membership x vtier)
-    sub-block. _PRIORITY_REFRESH names are excluded like the canaries:
-    once a round-start fold re-verifies them they jump the queue by
-    design (front tier 1), landing driver-fresh entries ahead of the
-    local-fold sub-block."""
-    verified_order = [n for n in q.QUERIES
-                      if n in q._VERIFIED and n not in q._CANARIES
-                      and n not in q._PRIORITY_REFRESH]
+    """Within each (tier, oracled) block, re-checks run in ascending
+    last-green-round order so no family drifts stale."""
+    blocks: dict[tuple, list[int]] = {}
+    for n in q.QUERIES:
+        tier, rnd = q._TIERS[n]
+        blocks.setdefault((tier, n in q.ORACLES), []).append(rnd)
+    for key, rounds in blocks.items():
+        assert rounds == sorted(rounds), key
 
-    def vtier(n):
-        if n not in q._EVER_GREEN:
-            return 0
-        return 1 if q._LEDGER_SOURCE.get(n) == "local" else 2
 
-    for oracled in (True, False):
-        block = [n for n in verified_order if (n in q.ORACLES) == oracled]
-        # vtier sub-blocks appear in order within the block...
-        tiers = [vtier(n) for n in block]
-        assert tiers == sorted(tiers)
-        # ...and rounds ascend within each vtier sub-block
-        for t in set(tiers):
-            rounds = [q._VERIFIED[n] for n in block if vtier(n) == t]
-            assert rounds == sorted(rounds)
-    # and the oracled block precedes the rows-only block entirely
-    idx = {n: i for i, n in enumerate(verified_order)}
-    oracled = [idx[n] for n in verified_order if n in q.ORACLES]
-    rows_only = [idx[n] for n in verified_order if n not in q.ORACLES]
-    assert not oracled or not rows_only or max(oracled) < min(rows_only)
+def test_check_order_one_query_per_tier(tmp_path):
+    """A synthetic ledger with one query per tier, plus a rows-only
+    query in tier 3, orders by tier first, oracled before rows-only
+    within a tier, and only then by round and name: the names and
+    rounds are chosen so that sorting by either alone gives another
+    order."""
+    oracled = sorted(
+        (n for n in q.QUERIES
+         if n in q.ORACLES and q.deps_md5_map(q.QUERIES[n]) is not None),
+        reverse=True,
+    )
+    t0, t1, t2, t3, t4 = oracled[:5]
+    rows_only = next(n for n in q.QUERIES if n not in q.ORACLES)
+    ledger = {
+        t0: _fresh_entry(t0, 10, "driver"),  # fresh, but never green
+        t1: dict(_fresh_entry(t1, 9, "driver"), fn_md5="0" * 32),
+        t2: _fresh_entry(t2, 8, "driver"),
+        t3: _fresh_entry(t3, 7, "local"),
+        rows_only: _fresh_entry(rows_only, 1, "local"),
+        t4: _fresh_entry(t4, 6, "driver"),
+    }
+    ledger[t2]["deps_md5_map"] = dict(
+        ledger[t2]["deps_md5_map"], **{"<local>": "0" * 32}
+    )
+    rows = {t1: GREEN, t2: GREEN, t3: GREEN, t4: GREEN,
+            rows_only: ROWS_ONLY}
+    tiers = q._load_verified(_write_ledger(tmp_path, ledger, rows))
+    assert [tiers[n] for n in (t0, t1, t2, t3, rows_only, t4)] == [
+        (0, 10), (1, 9), (2, 8), (3, 7), (3, 1), (4, 6)
+    ]
+    mine = set(ledger)
+    assert [n for n in q._check_order(tiers) if n in mine] == [
+        t0, t1, t2, t3, rows_only, t4
+    ]
+    # every query without a ledger entry is tier 0 or 1
+    assert {t for n, (t, _) in tiers.items() if n not in mine} <= {0, 1}
 
 
 def test_lsh_family_reverified_in_ledger():
     """The round-3 stale/broken MinHash-LSH family went green in round
-    4 (CORRECTNESS_r04) — the ledger must RECORD that (round >= 4
-    entries), closing the round-3 incident. Checked against the raw
-    ledger, not _VERIFIED: a later operator edit legitimately demotes
-    these to re-check (that's the deps_md5 mechanism working), but it
-    must never erase the recorded green. (Until round 4 this test
-    instead pinned them inside the driver's 50-slot cap window so
-    they'd be re-checked; that served its purpose.)"""
+    4 (CORRECTNESS_r04); the ledger must record a round-4+ green.
+    Checked against the raw ledger, not the tiers: a later operator
+    edit legitimately demotes these to re-check, but it must never
+    erase the recorded green."""
     ledger = json.loads((REPO / "VERIFIED_LEDGER.json").read_text())
     for name in ("minhash_lsh_pairs", "ngram_jaccard_lsh", "dedup_clusters",
                  "dedup_keep_best", "triangle_count_near_dup_graph",
@@ -258,11 +218,11 @@ def test_lsh_family_reverified_in_ledger():
 
 
 def test_red_round_evicts_earlier_green():
-    """The ledger's eviction rule, pinned with synthetic fixtures
-    (ADVICE r3/r4): a query green in round 1 then RED in round 2 must
-    be DELETED from the ledger — a regressed query's old green is not
-    evidence. Exercises tools.update_ledger.merge_round directly; the
-    test fails if the red->DELETE branch is removed."""
+    """The ledger's eviction rule, pinned with synthetic fixtures: a
+    query green in round 1 then RED in round 2 must be DELETED from the
+    ledger — a regressed query's old green is not evidence. Exercises
+    tools.update_ledger.merge_round directly; the test fails if the
+    red->DELETE branch is removed."""
     import sys
 
     sys.path.insert(0, str(REPO))
@@ -276,28 +236,20 @@ def test_red_round_evicts_earlier_green():
 
     queries = {"synthetic_q": fake_query}
     oracles = {"synthetic_q": "SELECT 1 AS one"}
-    green = {
-        "rows_match": True,
-        "schema_match": True,
-        "hash_match": True,
-        "spark_rows": 1,
-        "oracle_rows": 1,
-        "err": None,
-    }
-    red = dict(green, hash_match=False)
+    red = dict(GREEN, hash_match=False)
 
     ledger: dict = {}
-    merge_round(ledger, {"synthetic_q": green}, queries, oracles, 1)
+    merge_round(ledger, {"synthetic_q": GREEN}, queries, oracles, 1)
     assert ledger["synthetic_q"]["round"] == 1
 
     merge_round(ledger, {"synthetic_q": red}, queries, oracles, 2)
     assert "synthetic_q" not in ledger, "round-2 red must evict the r1 green"
 
     # an err row evicts too
-    merge_round(ledger, {"synthetic_q": green}, queries, oracles, 3)
+    merge_round(ledger, {"synthetic_q": GREEN}, queries, oracles, 3)
     merge_round(
         ledger,
-        {"synthetic_q": dict(green, err="boom")},
+        {"synthetic_q": dict(GREEN, err="boom")},
         queries,
         oracles,
         4,
@@ -305,17 +257,17 @@ def test_red_round_evicts_earlier_green():
     assert "synthetic_q" not in ledger
 
     # absence keeps the entry (un-sampled queries stay verified)
-    merge_round(ledger, {"synthetic_q": green}, queries, oracles, 5)
+    merge_round(ledger, {"synthetic_q": GREEN}, queries, oracles, 5)
     merge_round(ledger, {}, queries, oracles, 6)
     assert ledger["synthetic_q"]["round"] == 5
 
 
 def test_local_fold_never_downgrades_fresh_driver_provenance():
-    """Round-9 rule: a LOCAL fold over a driver-tagged entry whose
-    hashes are unchanged keeps the driver entry (source AND round) —
-    the driver's green still covers the current source, and the
-    driver-vs-local freshness tier must not lose it. When the source
-    HAS changed (different fn hash), the local green takes over."""
+    """A LOCAL fold over a driver-tagged entry whose hashes are
+    unchanged keeps the driver entry (source AND round) — the driver's
+    green still covers the current source, and the driver-vs-local
+    tier must not lose it. When the source HAS changed (different fn
+    hash), the local green takes over."""
     import sys
 
     sys.path.insert(0, str(REPO))
@@ -329,22 +281,14 @@ def test_local_fold_never_downgrades_fresh_driver_provenance():
 
     queries = {"synthetic_q": fake_query}
     oracles = {"synthetic_q": "SELECT 1 AS one"}
-    green = {
-        "rows_match": True,
-        "schema_match": True,
-        "hash_match": True,
-        "spark_rows": 1,
-        "oracle_rows": 1,
-        "err": None,
-    }
 
     ledger: dict = {}
-    merge_round(ledger, {"synthetic_q": green}, queries, oracles, 8,
+    merge_round(ledger, {"synthetic_q": GREEN}, queries, oracles, 8,
                 tag="driver")
     assert ledger["synthetic_q"]["source"] == "driver"
 
     # same source -> local fold is a no-op on the entry
-    merge_round(ledger, {"synthetic_q": green}, queries, oracles, 9,
+    merge_round(ledger, {"synthetic_q": GREEN}, queries, oracles, 9,
                 tag="local")
     assert ledger["synthetic_q"]["source"] == "driver"
     assert ledger["synthetic_q"]["round"] == 8
@@ -352,164 +296,43 @@ def test_local_fold_never_downgrades_fresh_driver_provenance():
     # changed source (simulate by mutating the stored fn hash) ->
     # local green must take over
     ledger["synthetic_q"]["fn_md5"] = "stale"
-    merge_round(ledger, {"synthetic_q": green}, queries, oracles, 9,
+    merge_round(ledger, {"synthetic_q": GREEN}, queries, oracles, 9,
                 tag="local")
     assert ledger["synthetic_q"]["source"] == "local"
     assert ledger["synthetic_q"]["round"] == 9
 
     # and a DRIVER fold always overwrites (fresh driver evidence)
-    merge_round(ledger, {"synthetic_q": green}, queries, oracles, 10,
+    merge_round(ledger, {"synthetic_q": GREEN}, queries, oracles, 10,
                 tag="driver")
     assert ledger["synthetic_q"]["source"] == "driver"
     assert ledger["synthetic_q"]["round"] == 10
 
 
-def test_operator_rewrite_demotes_dependents():
-    """deps_md5 staleness (ADVICE r4 medium): a ledger entry whose
-    recorded deps_md5 no longer matches the current operator-module
-    content must NOT count verified, even with oracle and querydef
-    text unchanged. Falsified end-to-end: corrupt one entry's
-    deps_md5 on disk, re-run _load_verified, assert demotion."""
-    ledger_path = REPO / "VERIFIED_LEDGER.json"
-    original = ledger_path.read_text()
-    ledger = json.loads(original)
-    name = next(n for n in q._VERIFIED if n in q.ORACLES)
-    assert "deps_md5" in ledger[name], "entries must record deps hash"
-    assert ledger[name]["deps_md5"] == q.deps_md5(q.QUERIES[name])
-    # entries stamped with the per-query map are held to IT (the
-    # coarse digest is ignored then) — corrupt whichever governs
-    if isinstance(ledger[name].get("deps_md5_map"), dict):
-        assert ledger[name]["deps_md5_map"] == q.deps_md5_map(
-            q.QUERIES[name]
-        )
-        ledger[name]["deps_md5_map"]["<local>"] = "0" * 32
-    ledger[name]["deps_md5"] = "0" * 32  # simulate an operator rewrite
-    try:
-        ledger_path.write_text(json.dumps(ledger))
-        demoted = q._load_verified()
-        assert name not in demoted, (
-            f"{name!r} counts verified despite a stale operator hash"
-        )
-    finally:
-        ledger_path.write_text(original)
-    # and with the pristine ledger it is verified again
-    assert name in q._load_verified()
-
-
-def test_deps_md5_covers_called_operators():
-    """The ivf blind spot from ADVICE r4, concretely: the dep-closure
-    digest for ivf_kmeans_topk must include operators/similarity.py's
-    bytes — recompute the digest with that file's content perturbed
-    out and assert it differs."""
-    import hashlib
-    import re
-    import sys
-    from pathlib import Path as P
-
-    fn = q.QUERIES["ivf_kmeans_topk"]
-    pkg = P(q.__file__).resolve().parent
-    dep_re = re.compile(
-        r"map_reduce_library_spark\.(operators|streaming|core|sources"
-        r"|querydefs)\.(\w+)"
+def test_operator_rewrite_demotes_dependents(tmp_path):
+    """A ledger entry whose recorded deps_md5_map no longer matches the
+    files the query reaches must drop to tier 2, even with oracle and
+    querydef text unchanged: corrupt one fresh entry's map in a copy of
+    the ledger and re-rank."""
+    ledger = json.loads((REPO / "VERIFIED_LEDGER.json").read_text())
+    name = next(
+        n for n in q.QUERIES if n in q.ORACLES and q._TIERS[n][0] >= 3
     )
-    top_re = re.compile(r"map_reduce_library_spark\.(tables|session)\b")
-    # replicate deps_md5's walk, but replace similarity.py's bytes
-    visited, dep_files = set(), set()
-    stack = [P(sys.modules[fn.__module__].__file__)]
-    while stack:
-        p = stack.pop()
-        if p in visited:
-            continue
-        visited.add(p)
-        text = p.read_text()
-        for m in dep_re.finditer(text):
-            dp = pkg / m.group(1) / (m.group(2) + ".py")
-            if dp.exists() and dp not in visited:
-                dep_files.add(dp)
-                stack.append(dp)
-        for m in top_re.finditer(text):
-            dp = pkg / (m.group(1) + ".py")
-            if dp.exists() and dp not in visited:
-                dep_files.add(dp)
-                stack.append(dp)
-    sim = pkg / "operators" / "similarity.py"
-    assert sim in dep_files, "similarity.py must be in the dep closure"
-
-    def digest(tamper: bool) -> str:
-        h = hashlib.md5()
-        for dp in sorted(dep_files):
-            h.update(dp.name.encode())
-            data = dp.read_bytes()
-            if tamper and dp == sim:
-                data += b"# rewritten"
-            h.update(data)
-        return h.hexdigest()
-
-    assert digest(False) == q.deps_md5(fn)
-    assert digest(True) != q.deps_md5(fn)
-
-
-def test_deps_md5_covers_top_level_tables_module():
-    """code-review r8: `from map_reduce_library_spark.tables import
-    load_table` was outside the dep-closure regex, so a behavior edit
-    to tables.normalize_event_ts kept every event query's stale green.
-    Replicate the walk and assert tables.py is in the covered set and
-    that its bytes move the digest."""
-    import hashlib
-    import re
-    import sys
-    from pathlib import Path as P
-
-    fn = q.QUERIES["wordcount"]
-    pkg = P(q.__file__).resolve().parent
-    dep_re = re.compile(
-        r"map_reduce_library_spark\.(operators|streaming|core|sources"
-        r"|querydefs)\.(\w+)"
+    assert ledger[name]["deps_md5_map"] == q.deps_md5_map(q.QUERIES[name])
+    ledger[name]["deps_md5_map"]["<local>"] = "0" * 32
+    tiers = q._load_verified(_write_ledger(tmp_path, ledger))
+    assert tiers[name] == (2, q._TIERS[name][1]), (
+        f"{name!r} counts verified despite a stale dependency digest"
     )
-    top_re = re.compile(r"map_reduce_library_spark\.(tables|session)\b")
-    visited, dep_files = set(), set()
-    stack = [P(sys.modules[fn.__module__].__file__)]
-    while stack:
-        p = stack.pop()
-        if p in visited:
-            continue
-        visited.add(p)
-        text = p.read_text()
-        for m in dep_re.finditer(text):
-            dp = pkg / m.group(1) / (m.group(2) + ".py")
-            if dp.exists() and dp not in visited:
-                dep_files.add(dp)
-                stack.append(dp)
-        for m in top_re.finditer(text):
-            dp = pkg / (m.group(1) + ".py")
-            if dp.exists() and dp not in visited:
-                dep_files.add(dp)
-                stack.append(dp)
-    tables = pkg / "tables.py"
-    assert tables in dep_files, "tables.py must be in the dep closure"
-
-    def digest(tamper: bool) -> str:
-        h = hashlib.md5()
-        for dp in sorted(dep_files):
-            h.update(dp.name.encode())
-            data = dp.read_bytes()
-            if tamper and dp == tables:
-                data += b"# rewritten"
-            h.update(data)
-        return h.hexdigest()
-
-    assert digest(False) == q.deps_md5(fn)
-    assert digest(True) != q.deps_md5(fn)
 
 
 def test_deps_md5_map_is_per_query_not_per_module():
-    """VERDICT r12 item 1, pinned: the per-query map must NOT charge a
-    sibling query for a function-local cross-module import. Concretely:
-    querydefs/dedup.py has one query whose body imports from
-    querydefs.similarity (pulling operators/ann_index.py), yet e.g.
-    exact_dedup_docs (same module) never touches ann_index — under the
-    old per-module closure an ann_index edit demoted all 26 dedup
-    queries; under the map it must demote only genuine dependents."""
+    """The per-query map must NOT charge a sibling query for a
+    function-local cross-module import. Concretely: querydefs/dedup.py
+    has one query whose body imports from querydefs.similarity (pulling
+    operators/ann_index.py), yet e.g. exact_dedup_docs (same module)
+    never touches ann_index — under a per-module closure an ann_index
+    edit would demote all 26 dedup queries; under the map it must
+    demote only genuine dependents."""
     dedup_queries = [
         (n, fn) for n, fn in q.QUERIES.items()
         if fn.__module__ == "map_reduce_library_spark.querydefs.dedup"
@@ -523,10 +346,8 @@ def test_deps_md5_map_is_per_query_not_per_module():
         n for n, fn in dedup_queries
         if "operators/ann_index.py" not in (q.deps_md5_map(fn) or {})
     ]
-    # the module-level closure DOES contain ann_index (that was the
-    # bug) ...
     assert "exact_dedup_docs" in dict(dedup_queries)
-    # ... but most dedup queries' per-query maps must not
+    # most dedup queries' per-query maps must not charge ann_index
     assert len(without_ann) > len(with_ann), (
         f"map granularity regressed: {len(with_ann)} dedup queries "
         f"charge ann_index.py, only {len(without_ann)} don't"
@@ -535,9 +356,9 @@ def test_deps_md5_map_is_per_query_not_per_module():
 
 
 def test_deps_md5_map_covers_called_operators():
-    """The map keeps the property deps_md5 was built for (ADVICE r4):
-    a query that calls into an operator module records that module's
-    file digest, so rewriting the operator demotes it."""
+    """A query that calls into an operator module records that module's
+    file digest, so rewriting the operator demotes it; the top-level
+    tables module counts too (querydefs import load_table from it)."""
     fn = q.QUERIES["ivf_kmeans_topk"]
     m = q.deps_md5_map(fn)
     assert m is not None
@@ -549,6 +370,36 @@ def test_deps_md5_map_covers_called_operators():
     # and the wordcount flagship charges its operator + tables
     wc = q.deps_md5_map(q.QUERIES["wordcount"])
     assert "operators/wordcount.py" in wc
+    assert "tables.py" in wc
+
+
+def _demoted_by(tmp_path, name: str, dep: str) -> tuple[int, int]:
+    """Tier and round of ``name`` after the committed ledger's digest
+    of ``dep`` in its map is replaced by one no file has."""
+    ledger = json.loads((REPO / "VERIFIED_LEDGER.json").read_text())
+    assert dep in ledger[name]["deps_md5_map"]
+    ledger[name]["deps_md5_map"][dep] = "0" * 32
+    return q._load_verified(_write_ledger(tmp_path, ledger))[name]
+
+
+def test_deps_md5_covers_called_operators(tmp_path):
+    """ivf_kmeans_topk calls into operators/similarity.py, so a change
+    to that file's bytes alone must drop the query to tier 2."""
+    name = "ivf_kmeans_topk"
+    tier, rnd = q._TIERS[name]
+    assert tier >= 3, f"{name!r} is not fresh in the committed ledger"
+    assert _demoted_by(tmp_path, name, "operators/similarity.py") == (
+        2, rnd
+    )
+
+
+def test_deps_md5_covers_top_level_tables_module(tmp_path):
+    """querydefs import load_table from the top-level tables module, so
+    a change to tables.py alone must drop wordcount to tier 2."""
+    name = "wordcount"
+    tier, rnd = q._TIERS[name]
+    assert tier >= 3, f"{name!r} is not fresh in the committed ledger"
+    assert _demoted_by(tmp_path, name, "tables.py") == (2, rnd)
 
 
 def test_deps_md5_map_local_helper_digest_tracks_helpers():
@@ -573,95 +424,22 @@ def test_deps_md5_map_local_helper_digest_tracks_helpers():
     )
 
 
-def test_ledger_entries_with_map_ignore_stale_coarse_digest():
-    """An entry carrying deps_md5_map must stay verified even when its
-    legacy per-module deps_md5 is stale — that coarse digest demoting
-    map-stamped entries would resurrect the r12 mass-demotion."""
-    ledger_path = REPO / "VERIFIED_LEDGER.json"
-    original = ledger_path.read_text()
-    ledger = json.loads(original)
-    name = next(
-        n for n in q._VERIFIED
-        if n in q.ORACLES
-        and isinstance(ledger.get(n, {}).get("deps_md5_map"), dict)
-    )
-    ledger[name]["deps_md5"] = "f" * 32  # stale coarse digest only
-    try:
-        ledger_path.write_text(json.dumps(ledger))
-        assert name in q._load_verified(), (
-            "a fresh deps_md5_map must shield the entry from the "
-            "stale legacy digest"
-        )
-    finally:
-        ledger_path.write_text(original)
-
-
-def test_local_fold_upgrades_driver_entry_with_deps_map():
-    """merge_round's keep-driver branch (round 9) extended for the
-    per-query map (round 13): when a local fold's hashes prove the
-    driver's green covers the current source, the driver entry is
-    KEPT (source and round) and additionally stamped with the finer
-    deps_md5_map it predates — provenance preserved, granularity
-    upgraded. A differing hash still replaces the entry as local."""
-    import sys
-
-    sys.path.insert(0, str(REPO))
-    try:
-        from tools.update_ledger import merge_round
-    finally:
-        sys.path.pop(0)
-
-    def fake_query(spark, sf_dir):  # pragma: no cover - hashed only
-        return None
-
-    queries = {"q": fake_query}
-    oracles = {"q": "SELECT 1 AS one"}
-    green = {"rows_match": True, "schema_match": True, "hash_match": True,
-             "spark_rows": 1, "oracle_rows": 1, "err": None}
-
-    def deps(fn):
-        return "d" * 32
-
-    the_map = {"operators/x.py": "a" * 32, "<local>": "b" * 32}
-
-    # driver entry predating the map
-    ledger: dict = {}
-    merge_round(ledger, {"q": green}, queries, oracles, 10,
-                deps_fn=deps, tag="driver")
-    assert ledger["q"]["source"] == "driver"
-    assert "deps_md5_map" not in ledger["q"]
-
-    # identical-hash local fold: keep driver provenance, gain the map
-    merge_round(ledger, {"q": green}, queries, oracles, 11,
-                deps_fn=deps, tag="local", deps_map_fn=lambda fn: the_map)
-    assert ledger["q"]["source"] == "driver"
-    assert ledger["q"]["round"] == 10
-    assert ledger["q"]["deps_md5_map"] == the_map
-
-    # a later local fold with a CHANGED coarse hash replaces as local
-    merge_round(ledger, {"q": green}, queries, oracles, 12,
-                deps_fn=lambda fn: "e" * 32, tag="local",
-                deps_map_fn=lambda fn: the_map)
-    assert ledger["q"]["source"] == "local"
-    assert ledger["q"]["round"] == 12
-
-
-def test_deps_md5_map_none_falls_back_to_coarse_digest():
-    """A query whose source is unavailable (lambda/partial) must fall
-    back to the legacy behavior chain, not crash or stamp a bogus
-    map."""
+def test_deps_md5_map_none_without_source():
+    """A query whose source is unavailable (lambda/partial) gets no map
+    rather than a crash or a bogus one; _load_verified then ranks it
+    tier 2."""
     fn = eval("lambda spark, sf: None")  # no retrievable source slice
     fn.__module__ = "map_reduce_library_spark.querydefs.wordcount"
     assert q.deps_md5_map(fn) is None
 
 
 def test_module_slices_always_include_compound_statements(tmp_path):
-    """Forward guard (round 13): a try/if-guarded top-level import —
-    none exist in the corpus today — must land in EVERY query's slice
-    rather than escape the staleness hash. Pinned by parsing a
-    synthetic module through the real _module_slices and asserting
-    the compound statement arrives with names=None (always-included)
-    while the docstring stays excluded."""
+    """A try/if-guarded top-level import — none exist in the corpus
+    today — must land in EVERY query's slice rather than escape the
+    staleness hash. Pinned by parsing a synthetic module through the
+    real _module_slices and asserting the compound statement arrives
+    with names=None (always-included) while the docstring stays
+    excluded."""
     import sys
     import types
 
@@ -679,13 +457,11 @@ def test_module_slices_always_include_compound_statements(tmp_path):
     mod.__file__ = str(src)
     sys.modules["synthmod_for_slices"] = mod
     try:
-        q._DEPS_MAP_MODULE_CACHE.pop("synthmod_for_slices", None)
         _, top_defs, header_stmts = q._module_slices(
             "synthmod_for_slices"
         )
     finally:
         sys.modules.pop("synthmod_for_slices", None)
-        q._DEPS_MAP_MODULE_CACHE.pop("synthmod_for_slices", None)
     kinds = [(names, seg.split("\n")[0]) for names, seg, _ in header_stmts]
     # the try-import is always-included (names=None)
     assert any(names is None and first.startswith("try:")
@@ -698,8 +474,8 @@ def test_module_slices_always_include_compound_statements(tmp_path):
 
 
 def test_querydefs_have_no_dynamic_same_module_references():
-    """ADVICE r13: deps_md5_map's reachability fixpoint matches helper
-    names as literal words, so a same-module helper reached only via a
+    """deps_md5_map's reachability fixpoint matches helper names as
+    literal words, so a same-module helper reached only via a
     dynamically constructed name (globals()[f"impl_{x}"], getattr with
     a computed string) would be under-included — its edits would not
     demote the query's green. Enforce the documented constraint
@@ -730,16 +506,15 @@ def test_querydefs_have_no_dynamic_same_module_references():
     )
 
 
-def test_module_slices_include_decorators_in_digest():
-    """ADVICE r13: node.lineno for a decorated def is the def line —
-    the slicer must start at the decorator so a behavior-bearing
-    decorator change perturbs the <local> digest instead of surviving
-    a stale green."""
+def test_module_slices_include_decorators_in_digest(tmp_path):
+    """node.lineno for a decorated def is the def line — the slicer
+    must start at the decorator so a behavior-bearing decorator change
+    perturbs the <local> digest instead of surviving a stale green."""
     import sys
     import textwrap
     import types
 
-    src = REPO / "tests" / "_synthmod_decorated.py"
+    src = tmp_path / "synthmod_decorated.py"
     src.write_text(textwrap.dedent("""
         def deco(fn):
             return fn
@@ -752,12 +527,9 @@ def test_module_slices_include_decorators_in_digest():
     mod.__file__ = str(src)
     sys.modules["synthmod_decorated"] = mod
     try:
-        q._DEPS_MAP_MODULE_CACHE.pop("synthmod_decorated", None)
         _, top_defs, _ = q._module_slices("synthmod_decorated")
     finally:
         sys.modules.pop("synthmod_decorated", None)
-        q._DEPS_MAP_MODULE_CACHE.pop("synthmod_decorated", None)
-        src.unlink(missing_ok=True)
     seg, words = top_defs["helper"]
     assert seg.lstrip().startswith("@deco"), seg
     assert "deco" in words  # the decorator name flows into the

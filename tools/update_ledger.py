@@ -1,60 +1,44 @@
-"""Rebuild/extend VERIFIED_LEDGER.json from a round's CORRECTNESS file.
+"""Fold a round's correctness rows into VERIFIED_LEDGER.json.
 
-The ledger is the staleness-aware source of truth for "this query is
-verified against its CURRENT oracle and querydef": each entry records
-the round a query last went green together with md5 hashes of its
-oracle SQL and its querydef function source *as they were at that
-round's snapshot*. ``queries.py`` counts a query verified only if the
-current hashes still match — so editing an oracle or a querydef
-automatically demotes the query to unverified-first in the driver's
-check order (VERDICT.md round 3, "What's wrong" §3).
+The ledger says, per query, which green still covers the current code.
+Each entry holds the round of the query's last green, its ``source``
+("driver" for the driver's CORRECTNESS_r{N}.json, "local" for a local
+differential) and the md5 digests of what that green checked, taken
+from the registry of the source tree that produced it:
 
-Usage (run at ROUND START, before editing oracles/querydefs, when the
-working tree still matches the snapshot the driver verified):
+  * ``oracle_md5``: the oracle SQL (null for rows-only queries);
+  * ``fn_md5``: the registered function's source;
+  * ``deps_md5_map``: {package file: md5} over the files the query
+    reaches, plus ``<local>`` for the same-module helpers it uses
+    (``queries.deps_md5_map``).
+
+``queries.py`` ranks a query by whether these digests still match (see
+its check-order comment), so an edit to an oracle, a querydef or an
+operator sends the dependent queries back to the front of the driver's
+sample.
+
+Usage, when the source tree still matches the snapshot the driver
+checked (otherwise pass that snapshot, unpacked, as ``--source``):
 
     python tools/update_ledger.py --round N [--source PATH]
 
-``--source`` points at the repo tree whose registry should be hashed
-(default: this repo). For bootstrapping past rounds, pass a git
-worktree checked out at that round's snapshot commit (the parent of
-the "round N: verdict/..." commit).
-
-Each upserted entry also records two dependency digests so operator
-rewrites auto-demote dependent queries: ``deps_md5`` (legacy, md5
-over the whole module-level transitive closure, ``queries.deps_md5``)
-and — since round 13 — ``deps_md5_map`` ({file: md5} over exactly the
-package files the QUERY's own source slice reaches,
-``queries.deps_md5_map``). The staleness check prefers the map when
-present, so an operator edit demotes only genuine dependents instead
-of every query in the module (VERDICT r12 item 1). ``--invalidate``
-remains for manual demotions outside either closure;
-``--migrate-deps-map`` stamps the map onto currently-fresh entries
-that predate it without disturbing round or provenance.
-
-Semantics per CORRECTNESS_r{N}.json row, merged into the ledger:
-  * green (rows+schema match, hash not explicitly false, no err)
-      -> upsert {round, oracle_md5, fn_md5} from the --source registry.
-  * err == "no_oracle" with spark_rows recorded (rows-only sketches)
-      -> upsert with oracle_md5 null (ADVICE r3: these can never go
-         hash-green; treating them as verified frees driver cap slots).
-  * red -> DELETE any existing entry (a later red evicts an old green).
-Queries absent from the round's file keep their existing entries.
-
-LOCAL differentials (VERDICT r6 items 1-2: the driver's 50-slot cap
-cannot drain an 89-deep staleness queue in one round, and late edits
-must ship pre-differentialed):
+Local differentials use the same rows, computed by drive_entry.py with
+the driver's oracles, tables and comparison:
 
     python tools/drive_entry.py --json LOCAL.json [QUERY ...]
     python tools/update_ledger.py --round N --file LOCAL.json --tag local
 
-``--file`` points at drive_entry's driver-row-shaped output —
-computed with the SAME oracles, the same sf0.01 tables, and the same
-order-insensitive sorted-column compare the driver uses. ``--tag``
-stamps each upserted entry with ``"source": "local"`` so a reader of
-VERIFIED_LEDGER.json can always distinguish a driver-sampled green
-from a locally-differentialed one; the staleness hash machinery
-treats both identically (either kind demotes the instant its oracle,
-querydef, or operator deps change).
+Per row:
+  * green (rows and schema match, hash not false, no err), or
+    err == "no_oracle" with spark_rows recorded (rows-only queries)
+      -> upsert {round, source, oracle_md5, fn_md5, deps_md5_map};
+         a local fold keeps a driver entry whose digests all match;
+  * anything else -> delete the entry (a red evicts an old green).
+Queries absent from the rows keep their entries.
+
+``--invalidate`` drops entries by hand; ``--restamp-deps REF`` re-encodes
+``deps_md5_map`` after a change to the digest code itself, where the
+files the digests cover are byte-identical to git REF.
 """
 
 from __future__ import annotations
@@ -75,10 +59,20 @@ def _md5(text: str | None) -> str | None:
     return hashlib.md5(text.encode()).hexdigest()
 
 
+def _load() -> dict:
+    path = REPO / "VERIFIED_LEDGER.json"
+    return json.loads(path.read_text()) if path.exists() else {}
+
+
+def _save(ledger: dict) -> None:
+    (REPO / "VERIFIED_LEDGER.json").write_text(
+        json.dumps(ledger, indent=1, sort_keys=True) + "\n"
+    )
+
+
 def _registry(source: Path):
-    """Import the (queries, oracles, deps_md5) registry from a source
-    tree. ``deps_md5`` is None for older trees that predate the
-    operator-dependency hash."""
+    """Import the (queries, oracles, deps_md5_map) registry from a
+    source tree; ``deps_md5_map`` is None for trees without it."""
     inserted = str(source)
     sys.path.insert(0, inserted)
     try:
@@ -86,19 +80,14 @@ def _registry(source: Path):
 
         assert Path(entry_mod.__file__).resolve().parent == source.resolve()
         queries_mod = sys.modules.get("map_reduce_library_spark.queries")
-        deps_fn = getattr(queries_mod, "deps_md5", None)
-        deps_map_fn = getattr(queries_mod, "deps_md5_map", None)
         return (
             entry_mod.queries(),
             entry_mod.oracle_sql(),
-            deps_fn,
-            deps_map_fn,
+            getattr(queries_mod, "deps_md5_map", None),
         )
     finally:
-        # remove by VALUE, not position: the import itself may insert
-        # further entries at index 0 (e.g. a resolved script dir), so
-        # pop(0) could evict the wrong path and leave the source tree
-        # permanently first on sys.path (code-review r8)
+        # remove by value: the import may insert further entries at
+        # index 0, so pop(0) could evict the wrong path
         try:
             sys.path.remove(inserted)
         except ValueError:
@@ -131,74 +120,44 @@ def merge_round(
     queries: dict,
     oracles: dict,
     round_no: int,
-    deps_fn=None,
     tag: str | None = None,
     deps_map_fn=None,
 ) -> dict:
-    """Merge one round's correctness rows into ``ledger`` IN PLACE and
-    return it. Pure of filesystem concerns so the green-upsert /
-    red-evict semantics are directly unit-testable:
-      * green (or rows-only green) -> upsert entry with current hashes
-      * red -> DELETE any existing entry (a later red evicts an old
-        green — the query regressed, its old green is no longer
-        evidence)
-      * names absent from ``rows`` keep their existing entries."""
+    """Merge one round's correctness rows into ``ledger`` in place and
+    return it (rules in the module docstring)."""
     for name, row in rows.items():
         if not isinstance(row, dict):
             continue
-        if _is_green(row) or _is_rows_only_green(row):
-            if name not in queries:
-                continue  # renamed/removed since that snapshot
-            entry = {
-                "round": round_no,
-                "oracle_md5": _md5(oracles.get(name)),
-                "fn_md5": _fn_md5(queries[name]),
-            }
-            if deps_fn is not None:
-                entry["deps_md5"] = deps_fn(queries[name])
-            if deps_map_fn is not None:
-                dmap = deps_map_fn(queries[name])
-                if dmap is not None:
-                    entry["deps_md5_map"] = dmap
-            if tag is not None:
-                entry["source"] = tag
-            # A LOCAL fold must never downgrade driver provenance when
-            # the evidence target is identical: if the existing entry
-            # is driver-tagged and every hash matches the new entry,
-            # the driver's green still covers the current source —
-            # keep it (source AND round), or the driver-vs-local
-            # freshness tier in queries.py loses the distinction the
-            # instant a full local differential runs (round 9).
-            prev = ledger.get(name)
-            if (
-                tag == "local"
-                and isinstance(prev, dict)
-                and prev.get("source") == "driver"
-                and all(
-                    prev.get(k) == entry.get(k)
-                    for k in (
-                        "oracle_md5", "fn_md5", "deps_md5", "deps_md5_map"
-                    )
-                    # compare only hashes BOTH sides recorded: a local
-                    # fold may stamp a finer hash the driver entry
-                    # predates (upgrade below), and a fold from an
-                    # OLDER source tree may lack one the driver entry
-                    # carries — neither asymmetry disproves that the
-                    # driver's green covers this source (code-review
-                    # r13: 'k in prev' alone let a map-less bootstrap
-                    # fold downgrade migrated driver entries to local)
-                    if k in prev and k in entry
-                )
-            ):
-                # the matching coarse hashes prove the driver's green
-                # covers the current source — upgrade the kept entry
-                # with the finer per-query map if it predates one
-                if "deps_md5_map" in entry and "deps_md5_map" not in prev:
-                    prev["deps_md5_map"] = entry["deps_md5_map"]
-                continue
-            ledger[name] = entry
-        else:
+        if not (_is_green(row) or _is_rows_only_green(row)):
             ledger.pop(name, None)
+            continue
+        if name not in queries:
+            continue  # renamed/removed since that snapshot
+        entry = {
+            "round": round_no,
+            "oracle_md5": _md5(oracles.get(name)),
+            "fn_md5": _fn_md5(queries[name]),
+        }
+        if deps_map_fn is not None:
+            dmap = deps_map_fn(queries[name])
+            if dmap is not None:
+                entry["deps_md5_map"] = dmap
+        if tag is not None:
+            entry["source"] = tag
+        # a local green of the code a driver green already covers adds
+        # nothing: keep the driver's round and source
+        prev = ledger.get(name)
+        if (
+            tag == "local"
+            and isinstance(prev, dict)
+            and prev.get("source") == "driver"
+            and all(
+                prev.get(k) == entry.get(k)
+                for k in ("oracle_md5", "fn_md5", "deps_md5_map")
+            )
+        ):
+            continue
+        ledger[name] = entry
     return ledger
 
 
@@ -210,91 +169,33 @@ def update(
 ) -> dict:
     correctness = file or REPO / f"CORRECTNESS_r{round_no:02d}.json"
     rows = json.loads(correctness.read_text())
-    queries, oracles, deps_fn, deps_map_fn = _registry(source)
-
-    ledger_path = REPO / "VERIFIED_LEDGER.json"
-    ledger = json.loads(ledger_path.read_text()) if ledger_path.exists() else {}
-
-    merge_round(
-        ledger, rows, queries, oracles, round_no, deps_fn, tag, deps_map_fn
-    )
-
-    ledger_path.write_text(json.dumps(ledger, indent=1, sort_keys=True) + "\n")
+    queries, oracles, deps_map_fn = _registry(source)
+    ledger = _load()
+    merge_round(ledger, rows, queries, oracles, round_no, tag, deps_map_fn)
+    _save(ledger)
     return ledger
 
 
-def migrate_deps_map() -> tuple[int, int, int]:
-    """One-off upgrade: stamp ``deps_md5_map`` (per-QUERY dep digests)
-    onto every ledger entry that is FRESH under the existing checks —
-    the matching oracle/fn/deps hashes attest the entry's green still
-    covers the current source, so recording the same state at finer
-    granularity preserves provenance honestly (VERDICT r12 item 1: the
-    coarse per-module closure demoted ~160 entries from one commit).
-    Stale entries are left untouched; they must re-verify."""
-    queries, oracles, deps_fn, deps_map_fn = _registry(REPO)
-    if deps_map_fn is None:
-        raise SystemExit("source tree has no deps_md5_map")
-    ledger_path = REPO / "VERIFIED_LEDGER.json"
-    ledger = json.loads(ledger_path.read_text())
-    stamped = skipped = already = 0
-    for name, entry in ledger.items():
-        if not isinstance(entry, dict) or name not in queries:
-            skipped += 1
-            continue
-        if "deps_md5_map" in entry:
-            already += 1
-            continue
-        fresh = (
-            entry.get("oracle_md5") == _md5(oracles.get(name))
-            and entry.get("fn_md5") == _fn_md5(queries[name])
-            and (
-                "deps_md5" not in entry
-                or entry["deps_md5"] == deps_fn(queries[name])
-            )
-        )
-        if not fresh:
-            skipped += 1
-            continue
-        dmap = deps_map_fn(queries[name])
-        if dmap is None:
-            skipped += 1
-            continue
-        entry["deps_md5_map"] = dmap
-        stamped += 1
-    ledger_path.write_text(json.dumps(ledger, indent=1, sort_keys=True) + "\n")
-    return stamped, skipped, already
-
-
 def restamp_deps(ref: str) -> tuple[int, int, int]:
-    """Re-encode dependency digests after a change to the DIGEST
-    MACHINERY itself (the slicer in ``queries.deps_md5_map`` /
-    ``deps_md5``), without disturbing round or provenance — but ONLY
-    where that is provably honest. An entry is restamped iff:
+    """Re-encode ``deps_md5_map`` after a change to the digest code
+    (``queries.deps_md5_map``), keeping round and source, where that
+    is provably honest. An entry is restamped iff:
 
-      1. its ``fn_md5`` and ``oracle_md5`` still match the current
-         registry (the query's own source and oracle are unchanged —
-         these hashes are slicer-independent), AND
-      2. every file its dependency closure touches — the querydef
-         module itself (covering ``<local>``) plus the union of file
-         keys from the OLD and NEW maps — is byte-identical between
-         the working tree and ``ref`` (the commit whose tree the
-         recorded verification ran against, e.g. the previous round's
-         artifact commit).
+      1. its ``fn_md5`` and ``oracle_md5`` match the current registry
+         (these digests do not depend on the digest code), and
+      2. every file its dependency closure touches (the querydef module
+         itself, covering ``<local>``, plus the file keys of the old
+         and new maps) is byte-identical between the working tree and
+         git ``ref``, the commit the recorded green was checked on.
 
-    Under those two gates the verified answer's entire evidence
-    surface is literally unchanged; only the hash encoding moved, so
-    rewriting ``deps_md5``/``deps_md5_map`` in place preserves the
-    green honestly (ADVICE r13: the decorator-aware slicer changes
-    every digest — without this, a full local re-fold would flip all
-    driver-sourced provenance to local). Entries failing either gate
-    are left stale and must re-verify through a differential."""
+    Then the green's whole evidence is unchanged and only its encoding
+    moved. Entries failing either gate stay stale and must re-verify."""
     import subprocess
 
-    queries, oracles, deps_fn, deps_map_fn = _registry(REPO)
+    queries, oracles, deps_map_fn = _registry(REPO)
     if deps_map_fn is None:
         raise SystemExit("source tree has no deps_md5_map")
-    ledger_path = REPO / "VERIFIED_LEDGER.json"
-    ledger = json.loads(ledger_path.read_text())
+    ledger = _load()
     pkg = REPO / "map_reduce_library_spark"
 
     unchanged_cache: dict[str, bool] = {}
@@ -331,12 +232,8 @@ def restamp_deps(ref: str) -> tuple[int, int, int]:
             skipped += 1
             continue
         new_map = deps_map_fn(fn)
-        new_deps = deps_fn(fn) if deps_fn is not None else None
         old_map = entry.get("deps_md5_map") or {}
-        if (
-            new_map == old_map
-            and entry.get("deps_md5") == new_deps
-        ):
+        if new_map == old_map:
             fresh_already += 1
             continue
         # gate: every file either closure touches is identical to ref
@@ -362,23 +259,17 @@ def restamp_deps(ref: str) -> tuple[int, int, int]:
             skipped += 1
             continue
         entry["deps_md5_map"] = new_map
-        if new_deps is not None:
-            entry["deps_md5"] = new_deps
         stamped += 1
-    ledger_path.write_text(json.dumps(ledger, indent=1, sort_keys=True) + "\n")
+    _save(ledger)
     return stamped, fresh_already, skipped
 
 
 def invalidate(names: list[str]) -> dict:
-    """Drop ledger entries by name. Use when an OPERATOR a querydef
-    calls changes behavior: fn_md5 only covers the registered querydef
-    function's source, so operator-level rewrites must be invalidated
-    explicitly to re-enter the driver's unverified-first window."""
-    ledger_path = REPO / "VERIFIED_LEDGER.json"
-    ledger = json.loads(ledger_path.read_text()) if ledger_path.exists() else {}
+    """Drop ledger entries by name, for a demotion no digest catches."""
+    ledger = _load()
     for name in names:
         ledger.pop(name, None)
-    ledger_path.write_text(json.dumps(ledger, indent=1, sort_keys=True) + "\n")
+    _save(ledger)
     return ledger
 
 
@@ -392,13 +283,9 @@ def main() -> None:
                     "--json output for a local differential)")
     ap.add_argument("--tag", help="stamp upserted entries with source=TAG "
                     "(use 'local' for drive_entry folds)")
-    ap.add_argument("--migrate-deps-map", action="store_true",
-                    help="stamp per-query deps_md5_map onto every "
-                    "currently-fresh entry (one-off granularity upgrade; "
-                    "preserves round and source)")
     ap.add_argument("--restamp-deps", metavar="REF",
-                    help="after a digest-machinery change: re-encode "
-                    "deps digests in place for entries whose fn/oracle "
+                    help="after a digest-code change: re-encode "
+                    "deps_md5_map in place for entries whose fn/oracle "
                     "match and whose whole dep closure is byte-identical "
                     "to git REF (preserves round and source)")
     args = ap.parse_args()
@@ -406,11 +293,6 @@ def main() -> None:
         stamped, fresh, skipped = restamp_deps(args.restamp_deps)
         print(f"ledger: restamped deps on {stamped} entries "
               f"({fresh} already current, {skipped} left for re-verify)")
-        return
-    if args.migrate_deps_map:
-        stamped, skipped, already = migrate_deps_map()
-        print(f"ledger: stamped deps_md5_map on {stamped} fresh entries "
-              f"({already} already stamped, {skipped} skipped)")
         return
     if args.invalidate:
         ledger = invalidate(args.invalidate)
@@ -420,11 +302,8 @@ def main() -> None:
     if args.round is None:
         ap.error("--round is required unless --invalidate is given")
     if args.tag is None and args.file is None:
-        # A round fold without --file is by definition folding the
-        # driver's own CORRECTNESS_r{N}.json — stamp it as such so the
-        # driver-vs-local freshness tier in queries.py sees it
-        # (VERDICT r8 "What's wrong" §1: an untagged fold left zero
-        # driver-fresh entries and broke the rotation).
+        # a fold without --file reads the driver's own
+        # CORRECTNESS_r{N}.json, so its greens are driver greens
         args.tag = "driver"
     ledger = update(args.round, args.source, args.file, args.tag)
     print(f"ledger: {len(ledger)} verified entries after round {args.round}")
