@@ -42,9 +42,13 @@ still balance.
 batch, not one per group, and holds at most one input batch, the
 largest group and that batch's outputs. Its width is AQE's: an
 intermediate under about 1 MB per slot is reduced by fewer tasks than
-slots. Pinning one partition per slot was measured and left out: every
-Arrow task costs 0.06-0.07 s whatever its rows (4-vCPU host), so on
-small intermediates the extra tasks cost more than they share out.
+slots. Pinning one partition per slot was measured over loopback TCP
+and left out: every Arrow task cost 0.06-0.07 s whatever its rows
+(4-vCPU host), so on small intermediates the extra tasks cost more than
+they shared out. On the Unix-socket transport of local sessions an
+Arrow task costs 0.022-0.025 s, and the pinned width measured flat on a
+skewed 8-key input and faster on a 400-key one (SCALE.md §8); the width
+is still AQE's.
 
 Every stage of a generic job starts one Python worker per task: no
 stage reads a persisted PythonRDD back through a second worker, and no
@@ -61,7 +65,13 @@ calling ``_zipstamp.skip_unchanged_zip_rereads`` once per partition,
 which makes that call re-read only archives that changed (0.06-0.25 ms
 on the same host). A worker's first task still pays the full cost
 once; later Python tasks on that worker, SQL and Arrow ones included,
-skip it. CPython 3.12+ invalidates lazily and is left alone.
+skip it. CPython 3.12+ invalidates lazily and is left alone. The
+other fixed cost was the socket to the JVM: over loopback TCP each
+Python task stalled about 40 ms (Linux's minimum delayed-ACK timeout)
+reading its input. Sessions from ``session.get_session`` on a local
+master use Unix domain sockets instead; on the same host a 4-task
+Python RDD job then takes 0.05-0.06 s of executor run time, not
+0.21-0.27 s, and a 4-task Arrow identity 0.09-0.10 s, not 0.24 s.
 """
 
 from __future__ import annotations

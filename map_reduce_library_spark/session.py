@@ -13,11 +13,23 @@ The defaults here are chosen for the 100-TB design stance:
   safe.
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle byte-for-byte.
+- On a single-JVM local master, Python workers, the accumulator server
+  and the local-data paths of ``collect``/``createDataFrame`` talk to
+  the JVM over Unix domain sockets instead of loopback TCP
+  (``_python_socket_conf``). Over TCP every Python task stalled about
+  40 ms, Linux's minimum delayed-ACK timeout, before its data arrived;
+  on a 4-vCPU host (``local[4]``) the executor run time of a 4-task
+  Python RDD job fell from 0.21-0.27 to 0.05-0.06 s, and of a 4-task
+  Arrow ``mapInPandas`` from 0.24 to 0.09-0.10 s. Other masters keep
+  TCP unless the deployment sets both keys itself.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import socket
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -48,6 +60,48 @@ def shuffle_partitions(spark: SparkSession) -> int:
     except (TypeError, ValueError):
         return _SPARK_SHUFFLE_PARTITIONS_DEFAULT
     return n if n > 0 else _SPARK_SHUFFLE_PARTITIONS_DEFAULT
+
+
+# Masters whose driver and executors share one JVM, so one directory
+# on this host holds every socket: local, local[N], local[*],
+# local[N,F] (Spark's own local-master patterns).
+_SINGLE_JVM_MASTER = re.compile(r"local(\[(\d+|\*)(\s*,\s*\d+)?\])?")
+# Spark names its socket files <dir>/.<uuid4>.sock (Python side, 43
+# bytes after <dir>) and <dir>/<uuid>.sock (JVM side); sun_path holds
+# at most 107 bytes on Linux.
+_MAX_SOCKET_DIR_BYTES = 107 - 43
+_FALLBACK_SOCKET_DIR = "/tmp"
+
+
+def _python_socket_conf(
+    master: str | None, temp_dir: str | None = None
+) -> dict[str, str]:
+    """Spark conf that puts the JVM<->Python sockets of a single-JVM
+    local master on Unix domain sockets, or ``{}`` to keep TCP.
+
+    The socket directory is ``temp_dir`` (default
+    ``tempfile.gettempdir()``), else ``/tmp``, the first that is
+    writable and short enough for a socket path; with neither, TCP
+    stays, because an over-long path fails session start in the
+    accumulator server (``AF_UNIX path too long``). Any other master
+    gets ``{}``: there the executors' temp directory is not known at
+    driver time, so a deployment that wants this transport sets both
+    keys itself."""
+    if (
+        master is None
+        or not _SINGLE_JVM_MASTER.fullmatch(master)
+        or not hasattr(socket, "AF_UNIX")
+    ):
+        return {}
+    for d in (temp_dir or tempfile.gettempdir(), _FALLBACK_SOCKET_DIR):
+        if len(os.fsencode(d)) <= _MAX_SOCKET_DIR_BYTES and os.access(
+            d, os.W_OK | os.X_OK
+        ):
+            return {
+                "spark.python.unix.domain.socket.enabled": "true",
+                "spark.python.unix.domain.socket.dir": d,
+            }
+    return {}
 
 
 def _resolve_master(
@@ -195,6 +249,10 @@ def get_session(
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/mrls-warehouse"),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    # extra_conf comes last, so a caller can still turn the transport off
+    for k, v in {
+        **_python_socket_conf(effective_master),
+        **(extra_conf or {}),
+    }.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -1005,8 +1005,7 @@ def test_counters_exact_with_speculation_enabled_real_cluster():
     import textwrap
 
     child_src = textwrap.dedent("""
-        import json, sys, time
-        sys.path.insert(0, "/root/repo")
+        import json, time
         from pyspark.sql import SparkSession
         from map_reduce_library_spark.core.job import run_map_reduce_async
 
@@ -1056,7 +1055,8 @@ def test_counters_exact_with_speculation_enabled_real_cluster():
         spark.stop()
     """)
     env = dict(os.environ)
-    env["PYTHONPATH"] = "/root/repo" + os.pathsep + env.get("PYTHONPATH", "")
+    # the child imports the package of this checkout
+    env["PYTHONPATH"] = str(REPO) + os.pathsep + env.get("PYTHONPATH", "")
     proc = subprocess.run(
         [sys.executable, "-c", child_src], capture_output=True,
         text=True, timeout=300, env=env,

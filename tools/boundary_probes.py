@@ -4,7 +4,7 @@ exactly the way an external user would, from a fresh interpreter,
 asserting the reference-parity behaviors that the DuckDB differential
 cannot see (async lifecycle, argument validation, double-close).
 
-Run:  PYTHONPATH=/root/repo python tools/boundary_probes.py
+Run:  python <checkout>/tools/boundary_probes.py   (from any directory)
 Exits nonzero on the first failed probe; prints one PROBE line each.
 
 Contract points exercised (SURVEY.md §2A/§2B):
@@ -36,7 +36,8 @@ import tempfile
 import zipfile
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 
 class OrderOnlyKey:
@@ -54,12 +55,9 @@ class OrderOnlyKey:
 
 
 def main() -> int:
-    # the driver and the workers import the probe's key class from the
-    # repo root
-    repo = str(Path(__file__).resolve().parents[1])
-    sys.path.insert(0, repo)
+    # the workers import the probe's key class from the repo root
     prev = os.environ.get("PYTHONPATH")
-    os.environ["PYTHONPATH"] = f"{repo}{os.pathsep}{prev}" if prev else repo
+    os.environ["PYTHONPATH"] = f"{REPO}{os.pathsep}{prev}" if prev else REPO
     from pyspark.sql import SparkSession
 
     spark = (

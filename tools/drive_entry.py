@@ -15,8 +15,9 @@ name-sorted columns).
 """
 import math
 import sys, time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def norm(v):
